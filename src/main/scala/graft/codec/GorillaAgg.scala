@@ -43,8 +43,8 @@ object GorillaAgg {
     udaf(encodeAgg).apply(ts, value)
 
   /** Column function: block -> array<struct<ts_epoch, value>>. Use with
-    * `inline`/`explode` to regenerate point rows. Backed by the native
-    * Catalyst [[GorillaDecodeExpression]] (no UDF encoder boundary).
+    * `inline`/`explode` to regenerate point rows. Backed by the compiled
+    * [[GorillaDecodeExpression]] kernel (no UDF encoder boundary).
     */
   def gorillaDecode(block: Column): Column =
     GorillaDecodeExpression(block)

@@ -1,67 +1,35 @@
 package graft.codec
 
+import graft.functions.Kernel
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expression: Gorilla block (binary) →
-  * array<struct<ts_epoch:bigint, value:double>>.
-  *
-  * A custom `Expression` rather than a Scala UDF so the decoder (a) has
-  * no closure-serialization or encoder boundary per row, (b) is
-  * registrable as a SQL function (`gorilla_decode`), and (c) is
-  * null-propagating at the Catalyst level. Evaluation is
-  * `CodegenFallback` — the surrounding plan stays in whole-stage
-  * codegen and calls into [[Gorilla.decode]] per block (one call per
-  * *block*, i.e. per (series, window), not per point; decode cost is
-  * amortized over the points the subsequent `explode` emits).
+/** Gorilla block (binary) → array<struct<ts_epoch:bigint, value:double>>
+  * as a compiled [[Kernel]]: no closure-serialization or encoder
+  * boundary per row (unlike a Scala UDF), registrable as the SQL
+  * function `gorilla_decode`, null-propagating. One call per *block*,
+  * i.e. per (series, window), not per point; decode cost is amortized
+  * over the points the subsequent `explode` emits.
   */
-case class GorillaDecodeExpression(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = GorillaDecodeExpression.schema
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"gorilla_decode expects BINARY, got ${child.dataType.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val (ts, vs) = Gorilla.decode(input.asInstanceOf[Array[Byte]])
-    val rows = new Array[Any](ts.length)
-    var i = 0
-    while (i < ts.length) {
-      rows(i) = InternalRow(ts(i), vs(i))
-      i += 1
-    }
-    new GenericArrayData(rows): ArrayData
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-
-  override def prettyName: String = "gorilla_decode"
-}
-
 object GorillaDecodeExpression {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("ts_epoch", LongType, nullable = false),
     StructField("value", DoubleType, nullable = false))),
     containsNull = false)
 
-  /** Column wrapper (Spark 4 Column wraps a ColumnNode, not an
-    * Expression — go through the classic bridge).
-    */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      GorillaDecodeExpression(GraftColumnBridge.expression(c)))
+  def decode(block: Array[Byte]): ArrayData = {
+    val (ts, vs) = Gorilla.decode(block)
+    val rows = new Array[Any](ts.length)
+    var i = 0
+    while (i < ts.length) {
+      rows(i) = InternalRow(ts(i), vs(i))
+      i += 1
+    }
+    new GenericArrayData(rows)
   }
+
+  def apply(c: Column): Column =
+    Kernel(this, "decode", schema, Seq(c -> BinaryType))
 }

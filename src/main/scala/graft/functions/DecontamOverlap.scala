@@ -1,13 +1,11 @@
 package graft.functions
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,15 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * every bench doc whose containment `1000·|C ∩ B| / |B|` meets the
   * threshold, ascending by bench_id.
   *
-  * Why a custom Expression (the [[IvfNearest]] justification): the
-  * bench side of decontamination is SMALL by the operator's standing
-  * contract — it was already collected by the driver to build a
-  * broadcast hash relation. Holding the same data as a shingle →
-  * posting-list index inside the expression lets the corpus side score
-  * at scan speed, so the corpus is never exploded into shingle rows at
-  * all and no (corpus × bench) pair stream ever crosses an exchange —
-  * the decision is made on in-row metadata (guide §8: shuffle keys and
-  * metadata, not payloads; here nothing needs to shuffle at all).
+  * The bench side of decontamination is SMALL by the operator's
+  * contract (the driver collects it). Holding it as a shingle →
+  * posting-list index inside this [[Kernel]] lets the corpus side
+  * score at scan speed: the corpus is never exploded into shingle rows
+  * and no (corpus × bench) pair stream crosses an exchange.
   *
   * Semantics are identical to the explode/join/aggregate composition
   * it replaces: the shingle set is [[WordShingles.shingleStrings]] (the
@@ -36,65 +30,50 @@ import org.apache.spark.unsafe.types.UTF8String
   * produced no rows); a doc with no qualifying bench doc → empty array
   * (explode drops it, like a join with no surviving pair).
   */
-case class DecontamOverlap(text: Expression, k: Int,
-                           benchIds: Array[Long],
-                           postings: java.util.HashMap[String, Array[Int]],
-                           benchSizes: Array[Long],
-                           thresholdMilli: Long)
-    extends UnaryExpression {
-
-  require(k >= 1, "shingle width must be positive")
-  require(benchIds.length == benchSizes.length,
-    "one shingle-set size per bench doc")
-  require(benchIds.zip(benchIds.tail).forall { case (a, b) => a < b },
-    "bench ids must be sorted ascending (the emission order)")
-
-  override def child: Expression = text
-
-  override def dataType: DataType = DecontamOverlap.OutType
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_decontam_overlap expects string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(t: Any): Any =
-    DecontamOverlap.score(t.asInstanceOf[UTF8String], k, benchIds,
-      postings, benchSizes, thresholdMilli)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val idsRef = ctx.addReferenceObj("benchIds", benchIds, "long[]")
-    val postRef = ctx.addReferenceObj("postings", postings,
-      "java.util.HashMap")
-    val bszRef = ctx.addReferenceObj("benchSizes", benchSizes, "long[]")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.DecontamOverlap$$.MODULE$$" +
-        s".score($t, $k, $idsRef, $postRef, $bszRef, ${thresholdMilli}L);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_decontam_overlap"
-}
-
 object DecontamOverlap {
 
   /** Nullable fields on purpose: the exploded columns keep the same
     * nullable schema the join/aggregate composition produced.
     */
-  private[functions] val OutType: DataType = ArrayType(
+  private val OutType: DataType = ArrayType(
     StructType(Seq(
       StructField("bench_id", LongType, nullable = true),
       StructField("overlap_milli", LongType, nullable = true))),
     containsNull = true)
 
-  def score(text: UTF8String, k: Int, benchIds: Array[Long],
-            postings: java.util.HashMap[String, Array[Int]],
-            benchSizes: Array[Long], thresholdMilli: Long): ArrayData = {
-    val shingles = WordShingles.shingleStrings(text, k)
+  /** The bench docs (non-null text, ascending unique id) and their
+    * shingle → posting-list index, compared by the docs they index.
+    */
+  final case class BenchIndex(k: Int, thresholdMilli: Long,
+                              docs: Seq[(Long, String)]) {
+    require(k >= 1, "shingle width must be positive")
+    private[functions] val ids: Array[Long] = docs.map(_._1).toArray
+    require(ids.zip(ids.drop(1)).forall { case (a, b) => a < b },
+      "bench ids must be unique and ascending (the emission order)")
+    private[functions] val sizes = new Array[Long](ids.length)
+    private[functions] val postings: java.util.HashMap[String, Array[Int]] = {
+      val lists = new java.util.HashMap[String, mutable.ArrayBuilder.ofInt]()
+      for (((_, txt), idx) <- docs.zipWithIndex) {
+        val set = WordShingles.shingleStrings(UTF8String.fromString(txt), k)
+        sizes(idx) = set.size.toLong
+        set.forEach(s =>
+          lists.computeIfAbsent(s, _ => new mutable.ArrayBuilder.ofInt)
+            .addOne(idx))
+      }
+      val out = new java.util.HashMap[String, Array[Int]](lists.size * 2)
+      lists.forEach((s, b) => out.put(s, b.result()))
+      out
+    }
+    override def toString: String =
+      s"BenchIndex(k=$k, thresholdMilli=$thresholdMilli, docs=${ids.length})"
+  }
+
+  def score(text: UTF8String, index: BenchIndex): ArrayData = {
+    val benchIds = index.ids
+    val benchSizes = index.sizes
+    val postings = index.postings
+    val thresholdMilli = index.thresholdMilli
+    val shingles = WordShingles.shingleStrings(text, index.k)
     val counts = new Array[Int](benchIds.length)
     val it = shingles.iterator()
     while (it.hasNext) {
@@ -128,40 +107,20 @@ object DecontamOverlap {
     new GenericArrayData(out)
   }
 
-  /** Builds the bench index from driver-side (bench_id, text) rows —
-    * the same size class the broadcast join already collected — and
-    * returns the scoring column. Null-text bench docs are skipped
-    * (they had no shingle rows, so nothing could ever match them).
+  /** Builds the bench index from driver-side (bench_id, text) rows and
+    * returns the scoring column. Bench ids are group keys of the
+    * containment measure, so a duplicated id is refused. Null-text
+    * bench docs are skipped (they have no shingles, so nothing could
+    * ever match them).
     */
   def of(corpusText: Column, k: Int, bench: Seq[(Long, String)],
          thresholdMilli: Long): Column = {
+    val dups = bench.groupBy(_._1).collect { case (id, rs) if rs.size > 1 => id }
+      .toSeq.sorted
+    require(dups.isEmpty, s"bench ids must be unique; ${dups.size} duplicated: " +
+      dups.take(20).mkString(", ") + (if (dups.size > 20) ", ..." else ""))
     val live = bench.filter(_._2 != null).sortBy(_._1)
-    val ids = live.map(_._1).toArray
-    val sizes = new Array[Long](ids.length)
-    val postings = new java.util.HashMap[String, Array[Int]]()
-    val tmp = new java.util.HashMap[String, java.util.ArrayList[Integer]]()
-    for (((_, txt), idx) <- live.zipWithIndex) {
-      val set = WordShingles.shingleStrings(UTF8String.fromString(txt), k)
-      sizes(idx) = set.size.toLong
-      val it = set.iterator()
-      while (it.hasNext) {
-        val s = it.next()
-        var lst = tmp.get(s)
-        if (lst == null) { lst = new java.util.ArrayList[Integer](); tmp.put(s, lst) }
-        lst.add(idx)
-      }
-    }
-    val tIt = tmp.entrySet().iterator()
-    while (tIt.hasNext) {
-      val e = tIt.next()
-      val lst = e.getValue
-      val arr = new Array[Int](lst.size())
-      var i = 0
-      while (i < arr.length) { arr(i) = lst.get(i); i += 1 }
-      postings.put(e.getKey, arr)
-    }
-    GraftColumnBridge.column(DecontamOverlap(
-      GraftColumnBridge.expression(corpusText), k, ids, postings, sizes,
-      thresholdMilli))
+    Kernel(this, "score", OutType, Seq(corpusText -> StringType),
+      consts = Seq(BenchIndex(k, thresholdMilli, live)))
   }
 }

@@ -1,23 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native codegen'd dot product of two `array<double>` columns.
-  *
-  * This is the inner loop of every similarity path (cosine scoring,
-  * norms, LSH plane projections): with Spark built-ins it would be
-  * `aggregate(zip_with(a, b, _*_), 0.0, _+_)`, but higher-order
-  * functions are `CodegenFallback` — interpreted per row, allocating a
-  * products array and lambda frames per pair. At corpus scale the
-  * candidate-pair stream makes that the dominant cost, so this is one
-  * of the few places a custom Expression with `doGenCode` is justified
-  * (SURVEY.md preference order: compose built-ins > custom Expression).
+/** Compiled dot product of two `array<double>` columns — the inner loop
+  * of every similarity path (cosine scoring, norms, LSH plane
+  * projections). The built-in form
+  * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` is higher-order-function
+  * work, the first case the [[Kernel]] doc names.
   *
   * Numerics: a strict sequential left-to-right fold over pairwise
   * products — bit-identical to the built-in composition it replaces
@@ -27,25 +18,9 @@ import org.apache.spark.sql.types._
   * the kernel total). Null ELEMENTS are treated as 0 contribution —
   * the engine's embedding columns never contain null elements.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+object DotProduct {
 
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(DoubleType, _) => true
-      case _                        => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot expects (array<double>, array<double>), got " +
-        s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def product(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -57,33 +32,7 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_dot"
-}
-
-object DotProduct {
-  /** Column wrapper through the Spark-4 classic bridge. */
   def dot(a: Column, b: Column): Column =
-    GraftColumnBridge.column(DotProduct(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    Kernel(this, "product", DoubleType,
+      Seq(a -> ArrayType(DoubleType), b -> ArrayType(DoubleType)))
 }

@@ -1,68 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The portable 60-bit md5 hash (`first 15 hex digits of md5` as a
-  * BIGINT) computed directly from the digest bytes.
+  * BIGINT) computed directly from the digest bytes — a compiled
+  * [[Kernel]] on the hottest hashing path in the engine (every MinHash
+  * shingle, chunk hash, fingerprint, sampling key).
   *
-  * Why a custom Expression (the [[DotProduct]] precedent): the built-in
-  * composition `conv(substring(md5(c), 1, 15), 16, 10)` renders the
-  * 16-byte digest to a 32-char hex STRING, copies a 15-char substring,
-  * and re-parses it base-16 — three allocations and a parse per call on
-  * the hottest hashing path in the engine (every MinHash shingle, chunk
-  * hash, fingerprint, sampling key). Here the value is read straight
-  * off the digest: the first 60 bits of the big-endian digest ARE the
-  * 15-hex-digit number, so `(first 8 bytes as BE long) >>> 4` is
-  * bit-identical to the conv chain (and to the DuckDB oracle's
-  * `CAST(concat('0x', substring(md5(e), 1, 15)) AS BIGINT)`). The
-  * MessageDigest instance is thread-cached instead of re-allocated per
-  * row. String inputs hash their UTF-8 bytes, exactly like the
-  * implicit string→binary cast under the built-in md5.
+  * The built-in composition `conv(substring(md5(c), 1, 15), 16, 10)`
+  * renders the digest to a 32-char hex string, copies a substring and
+  * re-parses it base-16 per call. The first 60 bits of the big-endian
+  * digest ARE the 15-hex-digit number, so `(first 8 bytes as BE long)
+  * >>> 4` is bit-identical to the conv chain (and to the DuckDB
+  * oracle's `CAST(concat('0x', substring(md5(e), 1, 15)) AS BIGINT)`).
+  * The MessageDigest instance is thread-cached. String inputs hash
+  * their UTF-8 bytes, exactly like the implicit string→binary cast
+  * under the built-in md5.
   */
-case class Hash60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_hash60 expects string or binary, got ${other.catalogString}")
-  }
-
-  // def, not val: dataType is unresolvable at construction time (the
-  // child may still be an UnresolvedAttribute when the Column is built)
-  private def isString = child.dataType == StringType
-
-  override def nullSafeEval(v: Any): Any =
-    if (isString) Hash60.hashUtf8(v.asInstanceOf[UTF8String])
-    else Hash60.hashBytes(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val m = if (isString) "hashUtf8" else "hashBytes"
-      s"${ev.value} = graft.functions.Hash60$$.MODULE$$.$m($v);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_hash60"
-}
-
 object Hash60 {
 
   private val digest =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
 
-  def hashBytes(bytes: Array[Byte]): Long = {
+  def hash(bytes: Array[Byte]): Long = {
     val d = digest.get()
     d.reset()
     val h = d.digest(bytes)
@@ -73,8 +36,8 @@ object Hash60 {
      ((h(6) & 0xffL) << 8)  |  (h(7) & 0xffL)) >>> 4
   }
 
-  def hashUtf8(s: UTF8String): Long = hashBytes(s.getBytes)
+  def hash(s: UTF8String): Long = hash(s.getBytes)
 
   def of(c: Column): Column =
-    GraftColumnBridge.column(Hash60(GraftColumnBridge.expression(c)))
+    Kernel(this, "hash", LongType, Seq(c -> BinaryType))
 }

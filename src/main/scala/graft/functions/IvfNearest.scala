@@ -1,26 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.types._
 
 /** Top-`nprobe` centroid ids of a vector against a CONSTANT codebook,
   * in `(cscore DESC, cent_id ASC)` order — the in-row coarse-quantizer
-  * kernel of the IVF paths.
-  *
-  * Why a custom Expression (the [[DotProduct]] justification, one level
-  * up): composed from built-ins this is 16 inlined dot-product loops
-  * plus struct/array construction in ONE whole-stage-codegen method —
-  * past the JIT's ~8 KB bytecode ceiling the stage runs as interpreted
-  * bytecode and the scan-speed kernel became the dominant cost
-  * (measured ~20-60 µs/row). Here codegen emits a single CALL into this
-  * compiled helper, so the generated method stays tiny and the loop
-  * itself is scalac-compiled and JIT-hot.
+  * [[Kernel]] of the IVF paths (composed from built-ins it is one
+  * inlined dot-product loop per centroid plus struct/array
+  * construction in one generated method, measured ~20-60 µs/row).
   *
   * Numerics are bit-identical to the built-in composition it replaces
   * (and to the DuckDB oracle): per centroid,
@@ -33,94 +22,45 @@ import org.apache.spark.sql.types._
   * (zero-norm vector — impossible for real embeddings; the round-5
   * ANSI cast would have errored) also ranks last instead of erroring.
   */
-case class IvfNearest(vec: Expression, nrm: Expression,
-                      centIds: Array[Long], centVecs: Array[Array[Double]],
-                      nprobe: Int)
-    extends BinaryExpression {
-
-  require(centIds.length == centVecs.length && centIds.nonEmpty,
-    "codebook must be non-empty with one id per vector")
-  require(centIds.zip(centIds.tail).forall { case (a, b) => a < b },
-    "codebook must be sorted by cent_id (the tie-break order)")
-  require(nprobe >= 1, "nprobe must be positive")
-
-  override def left: Expression = vec
-  override def right: Expression = nrm
-
-  // centroid norms: same sequential fold the constant-folded
-  // SQRT(graft_dot(lit, lit)) evaluated
-  private val centNorms: Array[Double] = centVecs.map { cv =>
-    var s = 0.0
-    var i = 0
-    while (i < cv.length) { s += cv(i) * cv(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _                        => false
-    }
-    if (vecOk && nrm.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_ivf_nearest expects (array<double>, double), got " +
-        s"(${vec.dataType.catalogString}, ${nrm.dataType.catalogString})")
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = vec.eval(input)
-    val n = nrm.eval(input)
-    IvfNearest.top(v.asInstanceOf[ArrayData],
-      n == null, if (n == null) 0.0 else n.asInstanceOf[Double],
-      centIds, centVecs, centNorms, nprobe)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val vEval = vec.genCode(ctx)
-    val nEval = nrm.genCode(ctx)
-    val idsRef = ctx.addReferenceObj("centIds", centIds, "long[]")
-    val vecsRef = ctx.addReferenceObj("centVecs", centVecs, "double[][]")
-    val normsRef = ctx.addReferenceObj("centNorms", centNorms, "double[]")
-    val helper = "graft.functions.IvfNearest$.MODULE$"
-    ev.copy(
-      code = vEval.code + nEval.code +
-        code"""
-           |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-           |  $helper.top(
-           |    ${vEval.isNull} ? null : ${vEval.value},
-           |    ${nEval.isNull}, ${nEval.isNull} ? 0.0 : ${nEval.value},
-           |    $idsRef, $vecsRef, $normsRef, $nprobe);
-           |""".stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(vec = newLeft, nrm = newRight)
-
-  override def prettyName: String = "graft_ivf_nearest"
-}
-
 object IvfNearest {
+
+  /** The centroids ascending by id (the tie-break order), compared by
+    * value.
+    */
+  final case class Codebook(ids: Seq[Long], vecs: Seq[Seq[Double]]) {
+    require(ids.length == vecs.length && ids.nonEmpty,
+      "codebook must be non-empty with one id per vector")
+    require(ids.zip(ids.tail).forall { case (a, b) => a < b },
+      "codebook must be sorted by cent_id (the tie-break order)")
+    private[functions] val idArr: Array[Long] = ids.toArray
+    private[functions] val vecArr: Array[Array[Double]] =
+      vecs.map(_.toArray).toArray
+    // centroid norms: same sequential fold the constant-folded
+    // SQRT(graft_dot(lit, lit)) evaluated
+    private[functions] val norms: Array[Double] = vecArr.map { cv =>
+      var s = 0.0
+      var i = 0
+      while (i < cv.length) { s += cv(i) * cv(i); i += 1 }
+      math.sqrt(s)
+    }
+    override def toString: String = s"Codebook(n=${ids.length})"
+  }
 
   /** Ranks below every real cscore (|cscore| ≤ ~2^31): DESC NULLS LAST. */
   private final val Sentinel = -Long.MaxValue
 
-  /** Top-`nprobe` cent ids by (score DESC, cent_id ASC); `ids` must be
-    * ascending so the strict-greater scan keeps the smallest id on ties.
+  /** Top-`nprobe` cent ids by (score DESC, cent_id ASC); the codebook
+    * is ascending so the strict-greater scan keeps the smallest id on
+    * ties.
     */
-  def top(vec: ArrayData, nrmIsNull: Boolean, nrm: Double,
-          ids: Array[Long], vecs: Array[Array[Double]],
-          norms: Array[Double], nprobe: Int): ArrayData = {
+  def top(vec: ArrayData, nrm: Double, nprobe: Int,
+          book: Codebook): ArrayData = {
+    val ids = book.idArr
+    val vecs = book.vecArr
+    val norms = book.norms
     val n = ids.length
     val scores = new Array[Long](n)
-    if (vec == null || nrmIsNull) {
+    if (vec == null) {
       java.util.Arrays.fill(scores, Sentinel)
     } else {
       var i = 0
@@ -162,12 +102,20 @@ object IvfNearest {
     new GenericArrayData(out)
   }
 
-  /** Column wrapper: top-`nprobe` cent ids for (vec, nrm). */
+  /** Column wrapper: top-`nprobe` cent ids for (vec, nrm). A null `nrm`
+    * reaches the helper as NaN (a null primitive argument would make the
+    * whole result null): every score is then NaN and ranks last, exactly
+    * the null ordering.
+    */
   def topCents(vec: Column, nrm: Column, cents: Seq[(Long, Array[Double])],
                nprobe: Int): Column = {
+    require(nprobe >= 1, "nprobe must be positive")
     val sorted = cents.sortBy(_._1)
-    GraftColumnBridge.column(IvfNearest(
-      GraftColumnBridge.expression(vec), GraftColumnBridge.expression(nrm),
-      sorted.map(_._1).toArray, sorted.map(_._2).toArray, nprobe))
+    Kernel(this, "top", ArrayType(LongType, containsNull = false),
+      Seq(vec -> ArrayType(DoubleType),
+          coalesce(nrm, lit(Double.NaN)) -> DoubleType,
+          lit(nprobe) -> IntegerType),
+      consts = Seq(Codebook(sorted.map(_._1), sorted.map(_._2.toSeq))),
+      nullSafe = false)
   }
 }

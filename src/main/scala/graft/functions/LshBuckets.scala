@@ -1,24 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** All `tables` random-hyperplane LSH bucket ids of a vector, as one
-  * array<long> (index = table) — the key-generation kernel of the LSH
-  * similarity paths.
-  *
-  * Why a custom Expression (same story as [[IvfNearest]]): composed
-  * from built-ins this is tables·planes (e.g. 32) inlined dot-product
-  * loops against literal ±1 plane arrays in ONE whole-stage-codegen
-  * method — past the JIT bytecode ceiling the stage runs interpreted
-  * and key generation dominates the scan. Codegen here emits a single
-  * call into this compiled helper.
+  * array<long> (index = table) — the key-generation [[Kernel]] of the
+  * LSH similarity paths (composed from built-ins it is tables·planes
+  * inlined dot-product loops in one generated method).
   *
   * Numerics are bit-identical to the built-in composition it replaces
   * (and therefore to the DuckDB oracle's baked plane constants): per
@@ -27,63 +16,27 @@ import org.apache.spark.sql.types._
   * `proj >= 0` — a null vector yields 0 for every plane term exactly
   * like the `when(...).otherwise(0)` sum it replaces, and NaN
   * projections set no bit (`NaN >= 0` is false on both paths).
-  *
-  * `signs` is indexed `[table * planes + p][dim]` and is built by the
-  * caller from the deterministic md5-parity plane family.
   */
-case class LshBuckets(vec: Expression, tables: Int, planes: Int,
-                      signs: Array[Array[Double]])
-    extends UnaryExpression {
-
-  require(tables >= 1 && planes >= 1 && planes <= 62,
-    "need 1..62 planes and at least one table")
-  require(signs.length == tables * planes,
-    s"signs must have tables*planes rows, got ${signs.length}")
-
-  override def child: Expression = vec
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = vec.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_lsh_buckets expects array<double>, got ${other.catalogString}")
-  }
-
-  override def eval(input: InternalRow): Any =
-    LshBuckets.buckets(vec.eval(input).asInstanceOf[ArrayData],
-                       tables, planes, signs)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val vEval = vec.genCode(ctx)
-    val signsRef = ctx.addReferenceObj("signs", signs, "double[][]")
-    val helper = "graft.functions.LshBuckets$.MODULE$"
-    ev.copy(
-      code = vEval.code +
-        code"""
-           |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-           |  $helper.buckets(
-           |    ${vEval.isNull} ? null : ${vEval.value},
-           |    $tables, $planes, $signsRef);
-           |""".stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(vec = newChild)
-
-  override def prettyName: String = "graft_lsh_buckets"
-}
-
 object LshBuckets {
 
+  /** Plane sign vectors indexed `[table * planes + p][dim]`, compared by
+    * value.
+    */
+  final case class Planes(tables: Int, planes: Int, signs: Seq[Seq[Double]]) {
+    require(tables >= 1 && planes >= 1 && planes <= 62,
+      "need 1..62 planes and at least one table")
+    require(signs.length == tables * planes,
+      s"signs must have tables*planes rows, got ${signs.length}")
+    private[functions] val arr: Array[Array[Double]] =
+      signs.map(_.toArray).toArray
+    override def toString: String = s"Planes(tables=$tables, planes=$planes)"
+  }
+
   /** Bucket id per table; null vec → every projection term is 0. */
-  def buckets(vec: ArrayData, tables: Int, planes: Int,
-              signs: Array[Array[Double]]): ArrayData = {
+  def buckets(vec: ArrayData, family: Planes): ArrayData = {
+    val tables = family.tables
+    val planes = family.planes
+    val signs = family.arr
     val out = new Array[Long](tables)
     if (vec != null) {
       val n = vec.numElements()
@@ -115,6 +68,8 @@ object LshBuckets {
     */
   def forPlanes(vec: Column, tables: Int, planes: Int,
                 signs: Array[Array[Double]]): Column =
-    GraftColumnBridge.column(LshBuckets(
-      GraftColumnBridge.expression(vec), tables, planes, signs))
+    Kernel(this, "buckets", ArrayType(LongType, containsNull = false),
+      Seq(vec -> ArrayType(DoubleType)),
+      consts = Seq(Planes(tables, planes, signs.map(_.toSeq).toSeq)),
+      nullSafe = false)
 }

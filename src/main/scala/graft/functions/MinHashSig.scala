@@ -1,26 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The full MinHash signature of one document, in-row: array<long> of
   * `numHashes` values, element i = min over the document's DISTINCT
-  * k-word shingles of `(hash60(shingle) % P) * a_i + b_i) % P`.
-  *
-  * Why a custom Expression (the [[DotProduct]] precedent): the
-  * signature pipeline used to explode every distinct shingle to a row
-  * and re-aggregate with 16 min() columns — per-task row expansion
-  * (~50 rows/doc), a hash-aggregate probe per shingle row, and the
-  * partial/final agg machinery, all to compute a value that is a pure
-  * function of one document. Here the split → shingle → md5 → affine
-  * mins run in one compiled pass per document; the aggregate and its
-  * exchange disappear from the plan.
+  * k-word shingles of `(hash60(shingle) % P) * a_i + b_i) % P` — a
+  * compiled [[Kernel]] in place of exploding every distinct shingle to
+  * a row and re-aggregating with one min() column per hash.
   *
   * Values are bit-identical to the explode+agg form: same shingle set
   * ([[WordShingles.shingles]] — the regex split / short-doc / distinct
@@ -29,51 +19,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * emitted NO rows for a null document, so callers filter nulls first
   * to keep the row set identical — [[graft.ops.Dedup]] does).
   */
-case class MinHashSig(text: Expression, k: Int, as: Seq[Long], bs: Seq[Long])
-    extends UnaryExpression {
-
-  require(k >= 1, "shingle width must be positive")
-  require(as.nonEmpty && as.length == bs.length,
-    "need one (a, b) pair per hash family member")
-
-  override def child: Expression = text
-
-  @transient private lazy val aArr: Array[Long] = as.toArray
-  @transient private lazy val bArr: Array[Long] = bs.toArray
-
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig expects string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(t: Any): Any =
-    MinHashSig.signature(t.asInstanceOf[UTF8String], k, aArr, bArr)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-      val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-      s"${ev.value} = graft.functions.MinHashSig$$.MODULE$$" +
-        s".signature($t, $k, $aRef, $bRef);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_minhash_sig"
-}
-
 object MinHashSig {
 
   private val P = Portable.MinHashP
 
-  def signature(text: UTF8String, k: Int,
-                as: Array[Long], bs: Array[Long]): ArrayData = {
+  /** Members 0..n-1 of the [[Portable.affineConsts]] family; equal by n. */
+  final case class Affine(n: Int) {
+    require(n >= 1, "need at least one hash family member")
+    private[functions] val as = Array.tabulate(n)(Portable.affineConsts(_)._1)
+    private[functions] val bs = Array.tabulate(n)(Portable.affineConsts(_)._2)
+  }
+
+  def signature(text: UTF8String, k: Int, family: Affine): ArrayData = {
+    val as = family.as
+    val bs = family.bs
     val shingles = WordShingles.shingles(text, k)
     val n = as.length
     val out = new Array[Long](n)
@@ -81,7 +40,7 @@ object MinHashSig {
     var s = 0
     val m = shingles.numElements()
     while (s < m) {
-      val base = Hash60.hashUtf8(shingles.getUTF8String(s)) % P
+      val base = Hash60.hash(shingles.getUTF8String(s)) % P
       var i = 0
       while (i < n) {
         val v = (base * as(i) + bs(i)) % P
@@ -93,11 +52,10 @@ object MinHashSig {
     new GenericArrayData(out)
   }
 
-  /** Column wrapper over [[Portable.affineConsts]] members 0..n-1. */
   def of(text: Column, k: Int, numHashes: Int): Column = {
-    val consts = (0 until numHashes).map(Portable.affineConsts)
-    GraftColumnBridge.column(MinHashSig(
-      GraftColumnBridge.expression(text), k,
-      consts.map(_._1), consts.map(_._2)))
+    require(k >= 1, "shingle width must be positive")
+    Kernel(this, "signature", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType, lit(k) -> IntegerType),
+      consts = Seq(Affine(numHashes)))
   }
 }

@@ -1,73 +1,39 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Non-overlapping occurrence counts of a fixed set of literal
   * substrings in ` text ` (one leading/trailing space pad), as one
-  * array<long> — the stopword-scoring kernel behind langId/quality.
+  * array<long> — the stopword-scoring [[Kernel]] behind langId/quality.
   *
-  * Why a custom Expression (the [[DotProduct]] precedent): the
-  * built-in [[Portable.occurrences]] composition materializes a
-  * REPLACED COPY of the document per substring
-  * (`length(replace(padded, sub, ''))`) — the language/quality scorers
-  * probe 16–20 stopwords, so every document was copied ~20× per
-  * projection. This kernel pads once and runs one allocation-free
-  * indexOf scan per substring. Counts are identical: `replace`
-  * consumes matches greedily left-to-right, exactly the indexOf loop,
-  * and `(len − len(replaced)) / len(sub)` equals the match count.
-  * Null text → null (the built-in chain's null propagation).
-  *
-  * `subs` is a Seq (STRUCTURAL equality) so independently-built scorer
-  * columns in one projection canonicalize equal and whole-stage
-  * codegen's subexpression elimination evaluates the kernel once.
+  * The built-in [[Portable.occurrences]] composition materializes a
+  * replaced copy of the document per substring
+  * (`length(replace(padded, sub, ''))`), ~20 copies per document for
+  * the language/quality scorers. This kernel pads once and runs one
+  * allocation-free indexOf scan per substring. Counts are identical:
+  * `replace` consumes matches greedily left-to-right, exactly the
+  * indexOf loop, and `(len − len(replaced)) / len(sub)` equals the
+  * match count. Null text → null (the built-in chain's null
+  * propagation).
   */
-case class OccurrenceCounts(text: Expression, subs: Seq[String])
-    extends UnaryExpression {
-
-  require(subs.nonEmpty && subs.forall(_.nonEmpty),
-    "need at least one non-empty substring")
-
-  override def child: Expression = text
-
-  @transient private lazy val subsArr: Array[String] = subs.toArray
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = text.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_occurrence_counts expects string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(t: Any): Any =
-    OccurrenceCounts.counts(t.asInstanceOf[UTF8String], subsArr)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val subsRef = ctx.addReferenceObj("subs", subsArr, "java.lang.String[]")
-      s"${ev.value} = graft.functions.OccurrenceCounts$$.MODULE$$" +
-        s".counts($t, $subsRef);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_occurrence_counts"
-}
-
 object OccurrenceCounts {
 
-  def counts(text: UTF8String, subs: Array[String]): ArrayData = {
+  /** The substrings, compared by value: independently built scorer
+    * columns of one projection are `semanticEquals`, so subexpression
+    * elimination evaluates the kernel once.
+    */
+  final case class Substrings(subs: Seq[String]) {
+    require(subs.nonEmpty && subs.forall(_.nonEmpty),
+      "need at least one non-empty substring")
+    private[functions] val arr: Array[String] = subs.toArray
+    override def toString: String = s"Substrings(n=${subs.length})"
+  }
+
+  def counts(text: UTF8String, substrings: Substrings): ArrayData = {
+    val subs = substrings.arr
     val padded = " " + text.toString + " "
     val out = new Array[Long](subs.length)
     var s = 0
@@ -88,6 +54,6 @@ object OccurrenceCounts {
   }
 
   def of(text: Column, subs: Seq[String]): Column =
-    GraftColumnBridge.column(OccurrenceCounts(
-      GraftColumnBridge.expression(text), subs))
+    Kernel(this, "counts", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), consts = Seq(Substrings(subs)))
 }

@@ -21,13 +21,6 @@ object Portable {
   def hash60Sql(expr: String): String =
     s"CAST(concat('0x', substring(md5($expr), 1, 15)) AS BIGINT)"
 
-  /** Seeded hash family member i (for MinHash permutations / LSH planes). */
-  def hashSeeded(i: Int, c: Column): Column =
-    hash60(concat(lit(s"$i:"), c))
-
-  def hashSeededSql(i: Int, expr: String): String =
-    hash60Sql(s"concat('$i:', $expr)")
-
   // ------------------------------------------------------------------
   // Affine MinHash permutation family over the Mersenne prime 2^31−1:
   // h_i(x) = (a_i · (hash60(x) mod P) + b_i) mod P. ONE md5 per input
@@ -49,8 +42,6 @@ object Portable {
   }
 
   /** The shared base hash: hash60(x) mod P (one md5 per input). */
-  def minHashBase(c: Column): Column = hash60(c) % MinHashP
-
   def minHashBaseSql(expr: String): String =
     s"(${hash60Sql(expr)} % $MinHashP)"
 

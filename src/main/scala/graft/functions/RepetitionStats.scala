@@ -1,27 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Gopher-style repetition measures of one document, in a single
-  * compiled pass: struct(n_chunks, dup_chunk_milli, n_bigrams,
-  * top_bigram_milli).
+  * compiled [[Kernel]] pass: struct(n_chunks, dup_chunk_milli,
+  * n_bigrams, top_bigram_milli).
   *
-  * Why a custom Expression (the [[DotProduct]] precedent): the built-in
-  * composition computed the top-bigram mass as
+  * The built-in composition computed the top-bigram mass as
   * `array_max(transform(array_distinct(bigrams), b -> size(filter(bigrams, x -> x = b))))`
-  * — O(distinct·total) work through CodegenFallback-interpreted
-  * higher-order functions, re-splitting the text for every lambda.
-  * Measured at sf0.1 that is ~22 ms per document (113 s for a 5k-doc
-  * noop pass); this kernel's hash-map frequency count is one linear
-  * pass (~100×). Values are bit-identical to the built-in form:
+  * — O(distinct·total) interpreted higher-order-function work,
+  * ~22 ms per document at sf0.1; this hash-map frequency count is one
+  * linear pass (~100×). Values are bit-identical to the built-in form:
   *  - words = regex-split on a single space, trailing empties kept
   *    (Spark `split(text, " ")` with the default -1 limit);
   *  - chunks = non-overlapping k-word joins, ceil(n/k) of them;
@@ -30,52 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - null text yields (null, 0, 0, 0) exactly like the `when`
   *    fallbacks of the built-in form.
   */
-case class RepetitionStats(text: Expression, k: Int)
-    extends UnaryExpression {
+object RepetitionStats {
 
-  require(k >= 1, "chunk width must be positive")
-
-  override def child: Expression = text
-
-  override def dataType: DataType = StructType(Seq(
+  private val OutType = StructType(Seq(
     StructField("n_chunks", LongType, nullable = true),
     StructField("dup_chunk_milli", LongType, nullable = false),
     StructField("n_bigrams", LongType, nullable = false),
     StructField("top_bigram_milli", LongType, nullable = false)))
-
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_repetition_stats expects string, got ${other.catalogString}")
-  }
-
-  override def eval(input: InternalRow): Any =
-    RepetitionStats.stats(text.eval(input).asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val tEval = text.genCode(ctx)
-    val helper = "graft.functions.RepetitionStats$.MODULE$"
-    ev.copy(
-      code = tEval.code +
-        code"""
-           |InternalRow ${ev.value} = $helper.stats(
-           |  ${tEval.isNull} ? null : ${tEval.value}, $k);
-           |""".stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_repetition_stats"
-}
-
-object RepetitionStats {
 
   def stats(text: UTF8String, k: Int): InternalRow = {
     if (text == null)
@@ -122,7 +77,9 @@ object RepetitionStats {
                                       topMilli))
   }
 
-  def of(text: Column, k: Int): Column =
-    GraftColumnBridge.column(RepetitionStats(
-      GraftColumnBridge.expression(text), k))
+  def of(text: Column, k: Int): Column = {
+    require(k >= 1, "chunk width must be positive")
+    Kernel(this, "stats", OutType,
+      Seq(text -> StringType, lit(k) -> IntegerType), nullSafe = false)
+  }
 }

@@ -1,21 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The SimHash fingerprint of one document, in-row: bit j is the sign
-  * of `Σ_{distinct words w} (2·bit_j(hash60(w)) − 1)`.
+  * of `Σ_{distinct words w} (2·bit_j(hash60(w)) − 1)` — a compiled
+  * [[Kernel]] in place of exploding every distinct word to a row and
+  * re-aggregating through `bits` sum() columns.
   *
-  * Why a custom Expression (the [[MinHashSig]] story, bit-vector
-  * flavored): the fingerprint is a pure function of one document, but
-  * the pipeline exploded every distinct word to a row and re-aggregated
-  * through `bits` (32) sum() columns — row expansion, a hash-agg probe
-  * per word row, and a partial/final aggregate with its exchange.
   * Values are bit-identical: the same distinct word set (regex split on
   * a single space, empties kept, first-occurrence distinct — the
   * [[WordShingles]] k=1 semantics ≡ `array_distinct(split(text, ' '))`),
@@ -23,35 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * the sum-sign composition. Null text → null (the explode form
   * emitted NO rows for a null document; callers filter nulls first).
   */
-case class SimHashFp(text: Expression, bits: Int) extends UnaryExpression {
-
-  require(bits >= 1 && bits <= 60, "simhash supports 1..60 bits")
-
-  override def child: Expression = text
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash_fp expects string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(t: Any): Any =
-    SimHashFp.fingerprint(t.asInstanceOf[UTF8String], bits)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.SimHashFp$$.MODULE$$" +
-        s".fingerprint($t, $bits);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_simhash_fp"
-}
-
 object SimHashFp {
 
   def fingerprint(text: UTF8String, bits: Int): Long = {
@@ -61,7 +26,7 @@ object SimHashFp {
     var i = 0
     while (i < words.length) {
       if (seen.add(words(i))) {
-        val wh = Hash60.hashUtf8(UTF8String.fromString(words(i)))
+        val wh = Hash60.hash(UTF8String.fromString(words(i)))
         var j = 0
         while (j < bits) {
           sums(j) += (if (((wh >>> j) & 1L) == 1L) 1L else -1L)
@@ -79,7 +44,9 @@ object SimHashFp {
     fp
   }
 
-  def of(text: Column, bits: Int): Column =
-    GraftColumnBridge.column(SimHashFp(
-      GraftColumnBridge.expression(text), bits))
+  def of(text: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 60, "simhash supports 1..60 bits")
+    Kernel(this, "fingerprint", LongType,
+      Seq(text -> StringType, lit(bits) -> IntegerType))
+  }
 }

@@ -1,60 +1,23 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct k-word shingles of single-space text, first-occurrence
-  * order, as one compiled pass — the shingle generator behind MinHash
-  * signatures and decontamination.
+  * order, as one compiled [[Kernel]] pass — the shingle generator
+  * behind MinHash signatures and decontamination.
   *
-  * Why a custom Expression (the [[DotProduct]] precedent): the built-in
-  * form `array_distinct(transform(sequence(1, greatest(n-k+1, 1)),
-  * i -> concat_ws(' ', slice(w, i, k))))` runs through CodegenFallback-
-  * interpreted higher-order functions and copies a k-element slice per
-  * shingle; per-document shingling was a dominant cost of the signature
-  * pipeline. Output is identical: words from the same regex split
-  * (single space, empties kept), one shingle per start position
-  * 1..max(n−k+1, 1) (short documents yield their single sub-k
-  * shingle), distincted preserving first occurrence exactly like
-  * `array_distinct`. Null text → null (so `explode` drops the row,
-  * like the built-in null chain).
+  * Replaces `array_distinct(transform(sequence(1, greatest(n-k+1, 1)),
+  * i -> concat_ws(' ', slice(w, i, k))))` with identical output: words
+  * from the same regex split (single space, empties kept), one shingle
+  * per start position 1..max(n−k+1, 1) (short documents yield their
+  * single sub-k shingle), distincted preserving first occurrence
+  * exactly like `array_distinct`. Null text → null (so `explode` drops
+  * the row, like the built-in null chain).
   */
-case class WordShingles(text: Expression, k: Int) extends UnaryExpression {
-
-  require(k >= 1, "shingle width must be positive")
-
-  override def child: Expression = text
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = text.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_word_shingles expects string, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(t: Any): Any =
-    WordShingles.shingles(t.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.WordShingles$$.MODULE$$" +
-        s".shingles($t, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(text = newChild)
-
-  override def prettyName: String = "graft_word_shingles"
-}
-
 object WordShingles {
 
   /** The distinct shingle set itself (first-occurrence order) — shared
@@ -96,7 +59,9 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  def of(text: Column, k: Int): Column =
-    GraftColumnBridge.column(WordShingles(
-      GraftColumnBridge.expression(text), k))
+  def of(text: Column, k: Int): Column = {
+    require(k >= 1, "shingle width must be positive")
+    Kernel(this, "shingles", ArrayType(StringType, containsNull = false),
+      Seq(text -> StringType, lit(k) -> IntegerType))
+  }
 }

@@ -14,15 +14,19 @@ import org.apache.spark.sql.functions._
   * Jaccard vs the question is tiny — containment, not Jaccard, is the
   * right decontamination metric.
   *
-  * Scale shape (100 TB corpus × small bench set): the bench shingle
-  * stream and its per-doc sizes are both BROADCAST — the corpus side
-  * streams through a broadcast hash join at scan speed, and the only
-  * exchange is the partial-aggregated (corpus_id, bench_id) overlap
-  * count (bounded by matching pairs, not the corpus). Nothing is ever
-  * quadratic in the corpus; bench sets are thousands of docs, far under
-  * broadcast limits.
+  * Scale shape (100 TB corpus × small bench set): the bench side is
+  * collected to the driver (at most [[Decontaminate.MaxBenchRows]]
+  * rows; a larger bench is refused, not allowed to exhaust driver
+  * memory) and compiled into an in-row shingle index; the corpus
+  * streams past it at scan speed with no join and no exchange. Nothing
+  * is ever quadratic in the corpus.
   */
 object Decontaminate {
+
+  /** Most bench rows [[overlap]] collects to the driver — the same
+    * bound as [[Dedup.ngramJaccard]]'s input guard.
+    */
+  val MaxBenchRows: Int = 1000000
 
   /** (doc_id, bench_id, overlap_milli) pairs with containment ≥
     * `thresholdMilli`. Shingle construction is
@@ -43,15 +47,26 @@ object Decontaminate {
     * null (explode drops them exactly like their missing shingle
     * rows), and bench ids must be unique (they are group keys in the
     * oracle form).
+    *
+    * Bench ids must be non-null and castable to long, and the bench
+    * side may hold at most [[MaxBenchRows]] rows; either violation
+    * fails with an IllegalArgumentException before any corpus work.
     */
   def overlap(corpus: DataFrame, corpusId: String, corpusText: String,
               bench: DataFrame, benchId: String, benchText: String,
               k: Int = 3, thresholdMilli: Long = 800L): DataFrame = {
-    val benchRows = bench
-      .select(col(benchId).cast("long"), col(benchText).cast("string"))
+    val collected = bench
+      .select(col(benchId).try_cast("long"), col(benchText).cast("string"))
+      .limit(MaxBenchRows + 1)
       .collect()
-      .map(r => (r.getLong(0),
-        if (r.isNullAt(1)) null else r.getString(1))).toSeq
+    require(collected.length <= MaxBenchRows,
+      s"decontamination bench side has more than $MaxBenchRows rows; it " +
+        "is collected to the driver to build the in-row shingle index")
+    require(!collected.exists(_.isNullAt(0)),
+      s"bench id column `$benchId` holds a null or non-numeric value; " +
+        "bench ids must be non-null long ids")
+    val benchRows = collected.map(r => (r.getLong(0),
+      if (r.isNullAt(1)) null else r.getString(1))).toSeq
     val scored = graft.functions.DecontamOverlap.of(
       col(corpusText), k, benchRows, thresholdMilli)
     Dedup.spread(corpus)

@@ -86,19 +86,6 @@ object Rollup {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Full cascade: raw → Map(tierName → rollup), each tier derived from
-    * the previous. Caller may persist intermediate tiers.
-    */
-  def allTiers(pages: DataFrame,
-               seriesCols: Seq[String] = Seq("domain")): Map[String, DataFrame] = {
-    val finest = fromRaw(pages, TierSpec.cascade.head, seriesCols)
-    TierSpec.cascade.tail
-      .scanLeft(TierSpec.cascade.head.name -> finest) { case ((_, finer), t) =>
-        t.name -> cascade(finer, t, seriesCols)
-      }
-      .toMap
-  }
-
   // ------------------------------------------------------------------
   // Three-state missingness through the cascade (SURVEY §7.2)
   // ------------------------------------------------------------------

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Sequential-fold dot product of two array<double> columns — the
-    * native codegen'd [[graft.functions.DotProduct]] expression
+    * compiled [[graft.functions.DotProduct]] kernel
     * (bit-identical to `aggregate(zip_with(a,b,_*_),0.0,_+_)`, which is
     * CodegenFallback-interpreted and was the hot path of every
     * candidate-pair stream).

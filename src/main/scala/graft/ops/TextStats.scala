@@ -29,8 +29,8 @@ object TextStats {
   /** One compiled occurrence pass for EVERY language's stopwords
     * ([[graft.functions.OccurrenceCounts]]): the per-word
     * replace-and-measure composition copied the document once per
-    * stopword (~20 copies/row across langId + quality). The node
-    * canonicalizes structurally, so the scorer columns of one
+    * stopword (~20 copies/row across langId + quality). The substrings
+    * compare by value, so the scorer columns of one
     * projection share a single evaluation via subexpression
     * elimination. Element order = flattened rs.stopwords order.
     */

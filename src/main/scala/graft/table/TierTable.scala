@@ -292,9 +292,6 @@ final class TierTable(val root: String, spark: SparkSession) {
       case (k, p) if p.path.nonEmpty => k
     }.toSet).getOrElse(Set.empty)
 
-  def readSnapshot(snapshot: Long): DataFrame =
-    readManifest(manifest(snapshot), None)
-
   private def readManifest(m: Manifest, only: Option[Set[String]]): DataFrame = {
     // Partition leaves of one snapshot live under different snap=<k>
     // dirs (copy-on-write); both levels are Hive-style, so ONE
@@ -528,23 +525,6 @@ final class TierTable(val root: String, spark: SparkSession) {
       }
     }
     deletable
-  }
-
-  /** Partitions whose content changed between two snapshots — the
-    * snapshot-diff that drives incremental recompute of coarser tiers
-    * (watermark semantics, vph5_to_vpts.py:120-144).
-    */
-  def changedPartitions(fromSnapshot: Option[Long], toSnapshot: Long)
-      : Set[String] = {
-    val to = manifest(toSnapshot).partitions
-    fromSnapshot match {
-      case None => to.keySet
-      case Some(f) =>
-        val from = manifest(f).partitions
-        to.filter { case (k, v) =>
-          !from.get(k).exists(o => o.checksum == v.checksum && o.rows == v.rows)
-        }.keySet
-    }
   }
 }
 

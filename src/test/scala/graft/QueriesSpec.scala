@@ -32,4 +32,13 @@ class QueriesSpec extends AnyFunSuite with SparkSuite {
     val missing = Bench.benchQueries.filterNot(qs.contains)
     assert(missing.isEmpty, s"bench references unknown queries: $missing")
   }
+
+  test("every bench query runs on sf0.001 (Bench times a failure as a sample)") {
+    val failed = Bench.benchQueries.flatMap { name =>
+      spark.catalog.clearCache()
+      try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+      catch { case e: Exception => Some(s"$name: $e") }
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
 }

@@ -47,6 +47,10 @@ class GorillaSparkSpec extends AnyFunSuite with SparkSuite {
           |ORDER BY pt.ts_epoch""".stripMargin).collect()
       assert(rows.map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
              Seq((100L, 1.5), (400L, 1.5), (700L, 2.5)))
+      // the other registered kernel: graft_dot(array<double>, array<double>)
+      Seq((Array(1.0, 2.0, 4.0), Array(3.0, 0.5, 0.25)))
+        .toDF("a", "b").createOrReplaceTempView("vecs")
+      assert(s2.sql("SELECT graft_dot(a, b) FROM vecs").head().getDouble(0) == 5.0)
     } finally {
       // do NOT stop s2: it shares the one SparkContext per JVM with the
       // suite session — stopping it would kill every later test. Just

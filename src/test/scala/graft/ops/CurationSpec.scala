@@ -94,6 +94,40 @@ class CurationSpec extends AnyFunSuite with SparkSuite {
     assert(gated.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
+  test("decontaminate: duplicate bench ids fail naming the duplicates") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val bench = Seq((7L, "a b c"), (9L, "x y z"), (7L, "b c d"))
+      .toDF("bench_id", "text")
+    val e = intercept[IllegalArgumentException](Decontaminate.overlap(
+      corpus, "doc_id", "text", bench, "bench_id", "text"))
+    assert(e.getMessage.contains("bench ids must be unique; 1 duplicated: 7"),
+      e.getMessage)
+  }
+
+  test("decontaminate: a null or non-numeric bench id fails naming the column") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    for (bad <- Seq(null, "q7")) {
+      val bench = Seq(("3", "a b c"), (bad, "b c d")).toDF("bid", "text")
+      val e = intercept[IllegalArgumentException](Decontaminate.overlap(
+        corpus, "doc_id", "text", bench, "bid", "text"))
+      assert(e.getMessage.contains("bench id column `bid`") &&
+        e.getMessage.contains("non-null long ids"), e.getMessage)
+    }
+  }
+
+  test("decontaminate: a bench side above the row cap is refused") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val bench = spark.range(Decontaminate.MaxBenchRows + 1L)
+      .select(col("id").as("bench_id"), lit(null).cast("string").as("text"))
+    val e = intercept[IllegalArgumentException](Decontaminate.overlap(
+      corpus, "doc_id", "text", bench, "bench_id", "text"))
+    assert(e.getMessage.contains(
+      s"bench side has more than ${Decontaminate.MaxBenchRows} rows"), e.getMessage)
+  }
+
   test("incremental dedup converges to the batch run, any split, pairs disjoint per ingest") {
     val batch = Dedup.minHashLsh(docs, "doc_id", "text")
       .orderBy("id_a", "id_b").collect().toSeq
@@ -432,6 +466,7 @@ class CurationSpec extends AnyFunSuite with SparkSuite {
     // the only Generate explodes the per-doc qualifying pairs
     assert(!p.contains("Join"), p.take(800))
     assert(!p.contains("HashAggregate"), p.take(800))
-    assert(p.contains("graft_decontam_overlap"), p.take(800))
+    assert(p.contains("static_invoke(graft.functions.DecontamOverlap.score("),
+      p.take(800))
   }
 }

@@ -97,7 +97,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // and the final pair distinct (the signature explode+agg exchange
     // is gone: signatures are a per-document expression now)
     assert(!p.contains("Join"), p.take(1200))
-    assert(p.contains("graft_minhash_sig"), p.take(1200))
+    assert(p.contains("static_invoke(graft.functions.MinHashSig.signature("),
+      p.take(1200))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 2, p.take(1200))
     // no persist leaks into the caller's session (other suites may
     // cache their own data on the shared session, so assert on THIS
@@ -114,6 +115,62 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
     // codegen stages print as "WholeStageCodegen (n)" or the compact
     // "*(n)" operator prefix depending on format
     assert(p.contains("WholeStageCodegen") || p.contains("*("), p.take(500))
+
+    // every compiled kernel, projected over parquet, sits in a codegen
+    // stage whose generated source calls the helper directly — the
+    // reflective interpreted path would read `references[..].eval(`
+    import graft.functions._
+    import graft.codec.{Gorilla, GorillaDecodeExpression}
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("embedding").cast("array<double>").as("v"))
+    val t = col("text")
+    val v = col("v")
+    // a valid block on every row, not constant-folded away
+    val block = when(col("doc_id") >= 0L,
+      lit(Gorilla.encode(Array(1L, 2L), Array(0.5, 1.5))))
+    val kernels: Seq[(DataFrame, org.apache.spark.sql.Column, String)] = Seq(
+      (docs, Hash60.of(t), "graft.functions.Hash60.hash"),
+      (docs, WordShingles.of(t, 3), "graft.functions.WordShingles.shingles"),
+      (docs, MinHashSig.of(t, 3, 4), "graft.functions.MinHashSig.signature"),
+      (docs, SimHashFp.of(t, 16), "graft.functions.SimHashFp.fingerprint"),
+      (docs, RepetitionStats.of(t, 8), "graft.functions.RepetitionStats.stats"),
+      (docs, OccurrenceCounts.of(t, Seq(" the ")),
+        "graft.functions.OccurrenceCounts.counts"),
+      (docs, DecontamOverlap.of(t, 3, Seq((1L, "a b c")), 500L),
+        "graft.functions.DecontamOverlap.score"),
+      (docs, GorillaDecodeExpression(block),
+        "graft.codec.GorillaDecodeExpression.decode"),
+      (emb, DotProduct.dot(v, v), "graft.functions.DotProduct.product"),
+      (emb, LshBuckets.forPlanes(v, 1, 2, Array(Array(1.0), Array(-1.0))),
+        "graft.functions.LshBuckets.buckets"),
+      (emb, IvfNearest.topCents(v, lit(1.0), Seq((0L, Array(1.0))), 1),
+        "graft.functions.IvfNearest.top"))
+    for ((src, kernel, fn) <- kernels) {
+      val q = src.select(kernel.as("k"))
+      q.collect()
+      val kp = plan(q)
+      assert(("""\*\(\d+\) Project \[static_invoke\(""" +
+        java.util.regex.Pattern.quote(fn + "(")).r.findFirstIn(kp).isDefined,
+        s"$fn outside a codegen stage:\n$kp")
+      val sources = q.queryExecution.debug.codegenToSeq().map(_._2)
+      assert(sources.exists(_.contains(s"$fn(")),
+        s"$fn is not a direct call in the generated code")
+    }
+
+    // equal constants built independently are one expression to
+    // Catalyst, so subexpression elimination evaluates them once
+    def sameKernel(a: org.apache.spark.sql.Column,
+                   b: org.apache.spark.sql.Column): Unit = {
+      val Seq(ea, eb) = docs.select(a.as("a"), b.as("b"))
+        .queryExecution.analyzed.expressions
+        .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Alias].child)
+      assert(ea.semanticEquals(eb), s"$ea vs $eb")
+    }
+    sameKernel(OccurrenceCounts.of(t, Seq(" the ", " a ")),
+               OccurrenceCounts.of(t, Vector(" the ", " a ")))
+    sameKernel(DecontamOverlap.of(t, 3, Seq((1L, "a b c")), 500L),
+               DecontamOverlap.of(t, 3, Vector((1L, "a b c")), 500L))
   }
 
   test("anti-join plans as a real anti join (no subquery re-scan)") {
@@ -148,10 +205,11 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
       emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5))
     // the round-5 plan exchanged |corpus|·nlist vector-carrying rows
     // per assignment pass (crossJoin + row_number window); the in-row
-    // graft_ivf_nearest kernel leaves exactly ONE exchange — the final
+    // IvfNearest kernel leaves exactly ONE exchange — the final
     // rank window over (query_id, neighbor_id, score) candidate rows
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p.take(1500))
-    assert(p.contains("graft_ivf_nearest"), p.take(1500))
+    assert(p.contains("static_invoke(graft.functions.IvfNearest.top("),
+      p.take(1500))
     assert(p.contains("BroadcastExchange"), p.take(1500))
   }
 
