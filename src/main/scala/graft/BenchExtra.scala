@@ -25,15 +25,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession(cpus.toInt)
     val qmap = SparkEntry.queries
 
     mode match {
@@ -84,5 +76,25 @@ object BenchExtra {
       case other => sys.error(s"unknown mode $other")
     }
     spark.stop()
+  }
+
+  /** The local session of the measurement mains (this one and
+    * [[ScalingBench]]): `local[cores]`, one shuffle partition per core,
+    * AQE on with partition coalescing off, UTC, no UI.
+    */
+  def localSession(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      // AQE coalescing sizes post-shuffle partitions from the PRE-explode
+      // map output (tiny) and would serialize the 100-2000x replication
+      // explode into one task
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

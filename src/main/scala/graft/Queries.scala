@@ -39,9 +39,10 @@ object Queries {
 
   private def flaggedTierQuery(tier: TierSpec): QueryDef = QueryDef(
     run = (s, dir) => {
-      val finest = Rollup.fromRawFlagged(pages(s, dir), TierSpec.T5m)
+      val finest = Rollup.fromRaw(pages(s, dir), TierSpec.T5m,
+        measures = Rollup.flagged)
       TierSpec.cascade.takeWhile(_.seconds <= tier.seconds).tail
-        .foldLeft(finest)((finer, t) => Rollup.cascadeFlagged(finer, t))
+        .foldLeft(finest)((finer, t) => Rollup.cascade(finer, t))
         .withColumn("bucket_flag", Rollup.bucketFlag)
     },
     oracle = Some(
@@ -91,8 +92,10 @@ object Queries {
     "ts_distinct_urls_1d" -> QueryDef(
       run = (s, dir) => {
         val p = pages(s, dir)
-        val est = Sketches.estimated(
-          Sketches.cascade(Sketches.fromRaw(p, TierSpec.T1h), TierSpec.T1d))
+        val est = Sketches.estimated(Rollup.cascade(
+          Rollup.fromRaw(p, TierSpec.T1h,
+            measures = Seq(Rollup.urlSketch, Rollup.rowCount)),
+          TierSpec.T1d))
         val exact = p
           .groupBy(col("domain"), Rollup.bucket(col("warc_epoch"), TierSpec.T1d))
           .agg(countDistinct(col("url")).as("exact_distinct"))
@@ -116,8 +119,9 @@ object Queries {
       run = (s, dir) => {
         val p = pages(s, dir)
         val est = Sketches.estimated(
-          Sketches.cascade(
-            Sketches.cascade(Sketches.fromRaw(p, TierSpec.T1h), TierSpec.T1d),
+          Rollup.cascade(
+            Rollup.cascade(Rollup.fromRaw(p, TierSpec.T1h,
+                measures = Seq(Rollup.urlSketch, Rollup.rowCount)), TierSpec.T1d),
             TierSpec.T30d))
         val exact = p
           .groupBy(col("domain"), Rollup.bucket(col("warc_epoch"), TierSpec.T30d))
@@ -145,8 +149,10 @@ object Queries {
         val p = pages(s, dir)
           .withColumn("value_micros", Rollup.micros(col("value")))
         val est = Sketches.quantEstimated(
-          Sketches.quantCascade(
-            Sketches.quantFromRaw(p, TierSpec.T1h), TierSpec.T1d))
+          Rollup.cascade(
+            Rollup.fromRaw(p, TierSpec.T1h,
+              measures = Seq(Rollup.valueSketch, Rollup.rowCount)),
+            TierSpec.T1d))
         val raw = p.select(col("domain"),
           Rollup.bucket(col("warc_epoch"), TierSpec.T1d), col("value_micros"))
         def rankOk(r: org.apache.spark.sql.Column, q: Double) =
@@ -295,9 +301,9 @@ object Queries {
       run = (s, dir) => {
         val p = pages(s, dir)
           .withColumn("value_micros", Rollup.micros(col("value")))
-        Sketches.histCascade(
-          Sketches.histFromRaw(p, TierSpec.T1h, "value_micros", 8),
-          TierSpec.T1d, 8)
+        Rollup.cascade(
+          Rollup.fromRaw(p, TierSpec.T1h, measures = Rollup.hist(8)),
+          TierSpec.T1d)
       },
       oracle = Some {
         val band = Sketches.histBandSql(

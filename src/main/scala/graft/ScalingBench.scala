@@ -14,22 +14,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
 
-  private def sessionAt(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing sizes post-shuffle partitions from the PRE-explode
-      // map output (tiny) and would serialize the 100-2000x replication
-      // explode into one task
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   private def bestRun(spark: SparkSession, sfDir: String, rep: Int,
                       iters: Int): (Long, Double) = {
     // warm-up at tiny scale: codegen + class-loading
@@ -51,7 +35,7 @@ object ScalingBench {
     def phase(cores: Int): (Long, Double) = {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      val s = sessionAt(cores)
+      val s = BenchExtra.localSession(cores)
       // the master is a SparkContext property: verify we really got the
       // requested core count (a live context would silently win)
       require(s.sparkContext.master == s"local[$cores]",

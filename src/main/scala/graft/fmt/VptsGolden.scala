@@ -35,8 +35,9 @@ object VptsGolden {
     // dense() references its input once (plus the 1-row bounds
     // aggregate) since the generator rewrite — no persist needed, no
     // cache handle leaks to callers
-    val r1h = Rollup.cascadeFlagged(
-      Rollup.fromRawFlagged(WebPages.load(spark, sfDir), TierSpec.T5m),
+    val r1h = Rollup.cascade(
+      Rollup.fromRaw(WebPages.load(spark, sfDir), TierSpec.T5m,
+        measures = Rollup.flagged),
       TierSpec.T1h)
     val dense = GapFill.forwardFill(GapFill.dense(r1h, TierSpec.T1h))
       .filter(col("bucket_epoch") < endEpoch)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.TierSpec
+import graft.core.{Flag, TierSpec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,16 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/vptstools/bin/vph5_to_vpts.py:204-212 — strip a
   * key component, re-aggregate) and its chunked partial-agg + final
   * merge (/root/reference/src/vptstools/s3.py:344-366): every measure
-  * is mergeable (count/sum/min/max), so a coarser tier is computed from
-  * the *finer tier*, never from raw data — at 100 TB the 1h tier reads
-  * the 5m tier (288× smaller), the 1d tier reads the 1h tier, etc.
+  * is mergeable, so a coarser tier is computed from the *finer tier*,
+  * never from raw data — at 100 TB the 1h tier reads the 5m tier (288×
+  * smaller), the 1d tier reads the 1h tier, etc.
+  *
+  * Exact measures and sketches are one kind of per-group summary here:
+  * each stored [[Measure]] is defined once, as its column name, its
+  * aggregate over raw rows and the aggregate that merges a finer
+  * level's column. [[fromRaw]] builds the finest level of any measure
+  * set; [[cascade]] merges whatever measure columns a finer level
+  * carries.
   *
   * Double-valued measures are quantized to integral micros
   * (`floor(value * 1e6)`) *before* aggregation so every tier is exact
@@ -23,8 +30,8 @@ import org.apache.spark.sql.functions._
   * Plan shape: one hash aggregate per tier (partial → final, map-side
   * combine free from Catalyst); no joins, no windows. The groupBy keys
   * `(series, bucket)` hash-partition evenly as long as series
-  * cardinality ≫ shuffle partitions; hot-series skew is handled by the
-  * two-phase salted variant [[fromRawSalted]].
+  * cardinality ≫ shuffle partitions; hot-series skew is handled by
+  * [[fromRaw]]'s two-phase salted form.
   */
 object Rollup {
 
@@ -37,153 +44,152 @@ object Rollup {
     */
   def micros(value: Column): Column = floor(value * lit(1000000L)).cast("long")
 
-  private val measures: Seq[Column] = Seq(
-    count(lit(1)).as("n"),
-    sum(col("n_chars")).as("sum_chars"),
-    sum(col("value_micros")).as("sum_value_micros"),
-    min(col("value_micros")).as("min_value_micros"),
-    max(col("value_micros")).as("max_value_micros"))
+  /** One stored measure: its column `name`, its aggregate over raw rows,
+    * and the aggregate that merges a finer level's `name` column into a
+    * coarser level.
+    */
+  final case class Measure(name: String, raw: Column, merge: Column)
 
-  private val merged: Seq[Column] = Seq(
-    sum(col("n")).as("n"),
-    sum(col("sum_chars")).as("sum_chars"),
-    sum(col("sum_value_micros")).as("sum_value_micros"),
-    min(col("min_value_micros")).as("min_value_micros"),
-    max(col("max_value_micros")).as("max_value_micros"))
+  private def summed(name: String, raw: Column): Measure =
+    Measure(name, raw, sum(col(name)))
 
-  /** Raw web pages → finest tier. `pages` needs columns
-    * (seriesCols…, warc_epoch, n_chars, value).
-    *
-    * `textSha`: optional per-row invariant hash (e.g.
-    * `xxhash64(WebPages.extractText(col("html")))`). Folded into a
+  /** Rows per bucket. */
+  val rowCount: Measure = summed("n", count(lit(1)))
+
+  private val sumChars = summed("sum_chars", sum(col("n_chars")))
+
+  private def valueMeasures(gate: Column => Column): Seq[Measure] = {
+    val v = gate(col("value_micros"))
+    Seq(summed("sum_value_micros", sum(v)),
+        Measure("min_value_micros", min(v), min(col("min_value_micros"))),
+        Measure("max_value_micros", max(v), max(col("max_value_micros"))))
+  }
+
+  /** Row count, character sum and value sum/min/max over every row. */
+  val values: Seq[Measure] = Seq(rowCount, sumChars) ++ valueMeasures(identity)
+
+  /** Three-state missingness through the cascade (SURVEY §7.2):
+    * per-state counts travel as plain sums (exact at every tier); value
+    * measures aggregate OK rows only — NODATA carries no measurement
+    * and UNDETECT is below detection, so neither may contaminate
+    * sums/extrema (reference semantics: the two missing sentinels
+    * round-trip raw→output untouched by aggregation, the reference's
+    * tests/test_vpts.py:109-139). A bucket with zero OK
+    * rows has null value measures, and null-skipping sum/min/max keep
+    * that exact through every merge. Needs a tier-0 `flag` column.
+    */
+  val flagged: Seq[Measure] = {
+    def stateCount(f: Byte, name: String) =
+      summed(name, sum(when(col("flag") === f, 1L).otherwise(0L)))
+    Seq(rowCount,
+        stateCount(Flag.OK, "n_ok"), stateCount(Flag.NODATA, "n_nodata"),
+        stateCount(Flag.UNDETECT, "n_undetect"),
+        sumChars) ++ valueMeasures(when(col("flag") === Flag.OK, _))
+  }
+
+  /** Per-row invariant hash (e.g.
+    * `xxhash64(WebPages.extractText(col("html")))`) folded into a
     * per-bucket `text_sha` via bit_xor — XOR is associative and
     * commutative, so every coarser tier's `text_sha` is the XOR over
     * all contributing raw rows: the byte-identical-text invariant
     * travels through the whole cascade as one 8-byte column.
     */
-  def fromRaw(pages: DataFrame, tier: TierSpec,
-              seriesCols: Seq[String] = Seq("domain"),
-              textSha: Option[Column] = None): DataFrame = {
-    val aggs = measures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
-    pages
-      .withColumn("value_micros", micros(col("value")))
-      .groupBy(seriesCols.map(col) :+ bucket(col("warc_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
+  def textShaOf(rowHash: Column): Measure =
+    Measure("text_sha", bit_xor(rowHash), bit_xor(col("text_sha")))
+
+  /** Widest histogram: the log2 band of a long is below 64. */
+  private val MaxHistBands = 64
+
+  /** Fixed-band histogram: `h<i>` counts the rows whose `value_micros`
+    * falls in log2 band i ([[Sketches.histBand]]) — the exact mergeable
+    * distribution aggregate.
+    */
+  def hist(bands: Int): Seq[Measure] = {
+    require(bands >= 1 && bands <= MaxHistBands,
+      s"histogram bands must be in 1..$MaxHistBands, got $bands")
+    val b = Sketches.histBand(col("value_micros"), bands)
+    (0 until bands).map(i => summed(s"h$i", sum(when(b === i, 1L).otherwise(0L))))
   }
 
-  /** Finer tier → coarser tier (partial-agg merge). Input must be the
-    * output of [[fromRaw]] or a previous [[cascade]] step. A `text_sha`
-    * column, if present, merges by XOR.
+  /** HLL sketch of distinct urls, merged by register-wise union. */
+  val urlSketch: Measure =
+    Measure("key_hll", hll_sketch_agg(col("url")), hll_union_agg(col("key_hll")))
+
+  /** KLL quantile sketch of `value_micros`, merged by sketch merge. */
+  val valueSketch: Measure =
+    Measure("val_kll", expr("kll_sketch_agg_bigint(value_micros)"),
+            expr("kll_merge_agg_bigint(val_kll)"))
+
+  /** Every stored measure by column name — what [[cascade]] merges. */
+  private lazy val byName: Map[String, Measure] =
+    (flagged ++ hist(MaxHistBands) ++
+      Seq(textShaOf(col("text_sha")), urlSketch, valueSketch))
+      .map(m => m.name -> m).toMap
+
+  /** Raw rows → finest level of `measures` (plus `text_sha` when
+    * `textSha` is given). `pages` needs (seriesCols…, warc_epoch) and
+    * the measures' inputs; `value_micros` is derived from `value`
+    * unless the frame already carries it.
+    *
+    * `saltBuckets` switches to the skew-resistant two-phase form: phase
+    * 1 aggregates (series, salt, bucket) — spreading a Zipf-head series
+    * over `saltBuckets` reducers — and phase 2 merges the partials
+    * grouped on the already-aligned `bucket_epoch`. Every measure is
+    * mergeable, so both forms are equal (spec-pinned).
+    */
+  def fromRaw(pages: DataFrame, tier: TierSpec,
+              seriesCols: Seq[String] = Seq("domain"),
+              textSha: Option[Column] = None,
+              measures: Seq[Measure] = values,
+              saltBuckets: Option[Int] = None): DataFrame = {
+    val all = measures ++ textSha.map(textShaOf)
+    val raw = all.map(m => m.raw.as(m.name))
+    val rows =
+      if (pages.columns.contains("value_micros")) pages
+      else pages.withColumn("value_micros", micros(col("value")))
+    val (series, buckets) = (seriesCols.map(col), bucket(col("warc_epoch"), tier))
+    saltBuckets match {
+      case None => aggregate(rows, series :+ buckets, raw)
+      case Some(k) =>
+        val partials = aggregate(
+          rows.withColumn("_salt", pmod(col("event_id"), lit(k))),
+          series ++ Seq(col("_salt"), buckets), raw)
+        merge(partials, series :+ col("bucket_epoch"), all)
+    }
+  }
+
+  /** Finer level → coarser `tier`: merges every measure column the
+    * finer frame carries, in its column order. Fails if it carries none.
     */
   def cascade(finer: DataFrame, tier: TierSpec,
               seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs =
-      if (finer.columns.contains("text_sha"))
-        merged :+ bit_xor(col("text_sha")).as("text_sha")
-      else merged
-    finer
-      .groupBy(seriesCols.map(col) :+ bucket(col("bucket_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
+    val carried = finer.columns.toSeq.flatMap(byName.get)
+    require(carried.nonEmpty,
+      s"cascade to ${tier.name}: no measure column among " +
+        finer.columns.mkString("[", ", ", "]"))
+    merge(finer, seriesCols.map(col) :+ bucket(col("bucket_epoch"), tier),
+          carried)
   }
 
-  // ------------------------------------------------------------------
-  // Three-state missingness through the cascade (SURVEY §7.2)
-  // ------------------------------------------------------------------
+  private def merge(finer: DataFrame, keys: Seq[Column],
+                    measures: Seq[Measure]): DataFrame =
+    aggregate(finer, keys, measures.map(m => m.merge.as(m.name)))
 
-  /** Flag-aware measures: per-state counts travel as plain sums (exact
-    * at every tier); value measures aggregate OK rows only — NODATA
-    * carries no measurement and UNDETECT is below detection, so neither
-    * may contaminate sums/extrema (reference semantics: the two missing
-    * sentinels round-trip raw→output untouched by aggregation,
-    * /root/reference/tests/test_vpts.py:109-139). A bucket with zero OK
-    * rows has null value measures, and null-skipping sum/min/max keep
-    * that exact through every merge.
-    */
-  private val flagMeasures: Seq[Column] = {
-    import graft.core.Flag
-    def cnt(f: Byte, name: String) =
-      sum(when(col("flag") === f, 1L).otherwise(0L)).as(name)
-    Seq(
-      count(lit(1)).as("n"),
-      cnt(Flag.OK, "n_ok"), cnt(Flag.NODATA, "n_nodata"),
-      cnt(Flag.UNDETECT, "n_undetect"),
-      sum(col("n_chars")).as("sum_chars"),
-      sum(when(col("flag") === Flag.OK, col("value_micros"))).as("sum_value_micros"),
-      min(when(col("flag") === Flag.OK, col("value_micros"))).as("min_value_micros"),
-      max(when(col("flag") === Flag.OK, col("value_micros"))).as("max_value_micros"))
-  }
-
-  private val flagMerged: Seq[Column] = Seq(
-    sum(col("n")).as("n"),
-    sum(col("n_ok")).as("n_ok"),
-    sum(col("n_nodata")).as("n_nodata"),
-    sum(col("n_undetect")).as("n_undetect"),
-    sum(col("sum_chars")).as("sum_chars"),
-    sum(col("sum_value_micros")).as("sum_value_micros"),
-    min(col("min_value_micros")).as("min_value_micros"),
-    max(col("max_value_micros")).as("max_value_micros"))
-
-  /** Raw pages (with a tier-0 `flag` column) → finest flagged tier. */
-  def fromRawFlagged(pages: DataFrame, tier: TierSpec,
-                     seriesCols: Seq[String] = Seq("domain"),
-                     textSha: Option[Column] = None): DataFrame = {
-    val aggs = flagMeasures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
-    pages
-      .withColumn("value_micros", micros(col("value")))
-      .groupBy(seriesCols.map(col) :+ bucket(col("warc_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Finer flagged tier → coarser flagged tier. */
-  def cascadeFlagged(finer: DataFrame, tier: TierSpec,
-                     seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs =
-      if (finer.columns.contains("text_sha"))
-        flagMerged :+ bit_xor(col("text_sha")).as("text_sha")
-      else flagMerged
-    finer
-      .groupBy(seriesCols.map(col) :+ bucket(col("bucket_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  private def aggregate(df: DataFrame, keys: Seq[Column],
+                        aggs: Seq[Column]): DataFrame =
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
 
   /** Derived per-bucket flag from the state counts — any tier, no extra
     * storage: observed (OK) beats below-detection (UNDETECT) beats
     * not-measured (NODATA).
     */
-  def bucketFlag: Column = {
-    import graft.core.Flag
+  def bucketFlag: Column =
     when(col("n_ok") > 0, lit(Flag.OK.toInt))
       .when(col("n_undetect") > 0, lit(Flag.UNDETECT.toInt))
       .otherwise(lit(Flag.NODATA.toInt)).cast("int")
-  }
 
-  /** Skew-resistant flagged variant: two-phase flag-aware aggregation —
-    * phase 1 over (series, salt, bucket) spreads a Zipf-head series
-    * over `saltBuckets` reducers, phase 2 merges the partials. Exactly
-    * equal to [[fromRawFlagged]] (all measures mergeable; XOR text_sha
-    * included) — equality is spec-pinned, so the production runner can
-    * flip it on for hot-domain inputs without a correctness delta.
-    */
-  def fromRawFlaggedSalted(pages: DataFrame, tier: TierSpec, saltBuckets: Int,
-                           seriesCols: Seq[String] = Seq("domain"),
-                           textSha: Option[Column] = None): DataFrame = {
-    val aggs1 = flagMeasures ++ textSha.map(c => bit_xor(c).as("text_sha")).toSeq
-    val salted = pages
-      .withColumn("value_micros", micros(col("value")))
-      .withColumn("_salt", pmod(col("event_id"), lit(saltBuckets)))
-      .groupBy(seriesCols.map(col) ++
-        Seq(col("_salt"), bucket(col("warc_epoch"), tier)): _*)
-      .agg(aggs1.head, aggs1.tail: _*)
-    val aggs2 =
-      if (textSha.isDefined) flagMerged :+ bit_xor(col("text_sha")).as("text_sha")
-      else flagMerged
-    salted
-      .groupBy(seriesCols.map(col) :+ col("bucket_epoch"): _*)
-      .agg(aggs2.head, aggs2.tail: _*)
-  }
-
-  /** DuckDB oracle measures matching [[fromRawFlagged]] composed through
-    * any number of [[cascadeFlagged]] steps.
+  /** DuckDB oracle measures matching [[fromRaw]] of [[flagged]] composed
+    * through any number of [[cascade]] steps.
     */
   val flagOracleMeasures: String =
     """CAST(count(*) AS BIGINT) AS n,
@@ -195,26 +201,9 @@ object Rollup {
       |CAST(min(CASE WHEN flag = 0 THEN CAST(floor(value * 1000000) AS BIGINT) END) AS BIGINT) AS min_value_micros,
       |CAST(max(CASE WHEN flag = 0 THEN CAST(floor(value * 1000000) AS BIGINT) END) AS BIGINT) AS max_value_micros""".stripMargin
 
-  /** Skew-resistant variant: two-phase aggregation with a salt on the
-    * series key. Phase 1 aggregates (series, salt, bucket) — spreading a
-    * hot series over `saltBuckets` reducers; phase 2 merges the partials.
-    * Use when one domain dominates (Zipf head at Common-Crawl scale).
-    */
-  def fromRawSalted(pages: DataFrame, tier: TierSpec, saltBuckets: Int,
-                    seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val salted = pages
-      .withColumn("value_micros", micros(col("value")))
-      .withColumn("_salt", pmod(col("event_id"), lit(saltBuckets)))
-      .groupBy(seriesCols.map(col) ++ Seq(col("_salt"), bucket(col("warc_epoch"), tier)): _*)
-      .agg(measures.head, measures.tail: _*)
-    salted
-      .groupBy(seriesCols.map(col) :+ col("bucket_epoch"): _*)
-      .agg(merged.head, merged.tail: _*)
-  }
-
-  /** DuckDB oracle measure list matching [[fromRaw]] composed through any
-    * number of [[cascade]] steps (sums of sums = direct sums; casts pin
-    * BIGINT vs DuckDB's HUGEINT sum type).
+  /** DuckDB oracle measure list matching [[fromRaw]] of [[values]]
+    * composed through any number of [[cascade]] steps (sums of sums =
+    * direct sums; casts pin BIGINT vs DuckDB's HUGEINT sum type).
     */
   val oracleMeasures: String =
     """CAST(count(*) AS BIGINT) AS n,

@@ -1,83 +1,28 @@
 package graft.ops
 
-import graft.core.TierSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Mergeable-sketch tier columns: approximate distinct counts that
-  * cascade losslessly.
+/** Reading the mergeable-sketch tier columns that [[Rollup]] builds
+  * and cascades (its `urlSketch`, `valueSketch` and `hist` measures).
   *
-  * The reference has no sketches (SURVEY.md §2.7); this extends the
-  * tier design for the quantities a 100 TB rollup cannot keep exactly
-  * (distinct urls per series-bucket). The key property is
-  * *mergeability*: the coarser tier unions the finer tier's HLL
-  * sketches (register-wise max — Apache DataSketches HLL via Spark's
-  * `hll_sketch_agg`/`hll_union_agg`), so
+  * The reference has no sketches (SURVEY.md §2.7); they extend the
+  * tier design for the quantities a 100 TB rollup cannot keep exactly.
+  * The key property is *mergeability*: the coarser tier unions the
+  * finer tier's HLL sketches (register-wise max — Apache DataSketches
+  * HLL via Spark's `hll_sketch_agg`/`hll_union_agg`), so
   * `estimate(union(5m sketches of a day)) == estimate(sketch(whole day))`
   * EXACTLY — union over disjoint slices reproduces the same registers.
-  * A plain `approx_count_distinct` number would not re-aggregate.
+  * A plain `approx_count_distinct` number would not re-aggregate; the
+  * same holds for KLL quantile sketches (`kll_merge_agg_bigint`) and
+  * the per-band histogram counts (sums).
   */
 object Sketches {
 
-  /** The single source of truth for each ladder's finest-level
-    * aggregate — shared by the per-ladder fromRaw methods AND the
-    * combined [[allFromRaw]] pass, so the incrementally maintained
-    * tiers can never silently diverge from the direct computation the
-    * specs compare them against.
-    */
-  private def hllAgg(keyCol: String): Column =
-    hll_sketch_agg(col(keyCol)).as("key_hll")
-  private def kllAgg(valueCol: String): Column =
-    expr(s"kll_sketch_agg_bigint($valueCol)").as("val_kll")
-  private def histAggs(valueCol: String, bands: Int): Seq[Column] = {
-    val b = histBand(col(valueCol), bands)
-    (0 until bands).map(i => sum(when(b === i, 1L).otherwise(0L)).as(s"h$i"))
-  }
-
-  /** Finest tier with an HLL sketch of distinct `keyCol` per bucket. */
-  def fromRaw(pages: DataFrame, tier: TierSpec, keyCol: String = "url",
-              seriesCols: Seq[String] = Seq("domain")): DataFrame =
-    pages
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("warc_epoch"), tier): _*)
-      .agg(hllAgg(keyCol), count(lit(1)).as("n"))
-
-  /** Coarser tier: register-wise union of the finer tier's sketches. */
-  def cascade(finer: DataFrame, tier: TierSpec,
-              seriesCols: Seq[String] = Seq("domain")): DataFrame =
-    finer
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("bucket_epoch"), tier): _*)
-      .agg(hll_union_agg(col("key_hll")).as("key_hll"),
-           sum(col("n")).as("n"))
-
-  /** Materialize the estimate column. */
+  /** Materialize the distinct-url estimate column. */
   def estimated(tierDf: DataFrame): DataFrame =
     tierDf.withColumn("distinct_est", hll_sketch_estimate(col("key_hll")))
       .drop("key_hll")
-
-  // ------------------------------------------------------------------
-  // Mergeable QUANTILE tier (Apache DataSketches KLL via Spark 4's
-  // kll_sketch_agg_bigint / kll_merge_agg_bigint): per-bucket value
-  // distributions that cascade losslessly — the coarser tier MERGES
-  // the finer tier's sketches instead of re-scanning raw rows, the
-  // same continuous-aggregate shape as the HLL tier. A plain
-  // percentile number cannot re-aggregate; the sketch can.
-  // ------------------------------------------------------------------
-
-  /** Finest tier with a KLL sketch of `valueCol` (bigint) per bucket. */
-  def quantFromRaw(pages: DataFrame, tier: TierSpec,
-                   valueCol: String = "value_micros",
-                   seriesCols: Seq[String] = Seq("domain")): DataFrame =
-    pages
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("warc_epoch"), tier): _*)
-      .agg(kllAgg(valueCol), count(lit(1)).as("n"))
-
-  /** Coarser tier: merge of the finer tier's KLL sketches. */
-  def quantCascade(finer: DataFrame, tier: TierSpec,
-                   seriesCols: Seq[String] = Seq("domain")): DataFrame =
-    finer
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("bucket_epoch"), tier): _*)
-      .agg(expr("kll_merge_agg_bigint(val_kll)").as("val_kll"),
-           sum(col("n")).as("n"))
 
   /** Materialize quantile estimates (actual elements of the bucket —
     * KLL is a rank sketch, exact while the bucket fits the sketch's
@@ -110,40 +55,4 @@ object Sketches {
 
   def histBandSql(expr: String, bands: Int): String =
     s"least(length(bin(greatest($expr, 0) + 1)) - 1, ${bands - 1})"
-
-  /** Finest tier: K band-count columns per (series, bucket). */
-  def histFromRaw(pages: DataFrame, tier: TierSpec, valueCol: String,
-                  bands: Int, seriesCols: Seq[String] = Seq("domain"))
-      : DataFrame = {
-    val aggs = histAggs(valueCol, bands)
-    pages
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("warc_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** ALL three finest-level sketch aggregates in ONE pass: the ladders
-    * share the exact (series, bucket) grouping key, so a single
-    * scan + shuffle produces the histogram band counts, the HLL key
-    * sketch, AND the KLL value sketch side by side — the tier runner
-    * splits the result into its three tables (three writes, no
-    * re-aggregation, no repeated raw read).
-    */
-  def allFromRaw(pages: DataFrame, tier: TierSpec, valueCol: String,
-                 bands: Int, keyCol: String = "url",
-                 seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs = histAggs(valueCol, bands) ++
-      Seq(hllAgg(keyCol), kllAgg(valueCol), count(lit(1)).as("n"))
-    pages
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("warc_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Coarser tier: per-band sums of the finer tier (lossless merge). */
-  def histCascade(finer: DataFrame, tier: TierSpec, bands: Int,
-                  seriesCols: Seq[String] = Seq("domain")): DataFrame = {
-    val aggs = (0 until bands).map(i => sum(col(s"h$i")).as(s"h$i"))
-    finer
-      .groupBy(seriesCols.map(col) :+ Rollup.bucket(col("bucket_epoch"), tier): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
 }

@@ -3,9 +3,9 @@ package graft.run
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.core.TierSpec
-import graft.ops.{Rollup, Sketches}
+import graft.ops.Rollup
 import graft.table.{PartitionLineage, TierTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental tier-cascade runner: raw web pages → 5m → 1h → 1d → 30d
@@ -41,7 +41,7 @@ final class TierRunner(spark: SparkSession, root: String,
 
   /** Start of the width-aligned bucket containing a day partition key —
     * the ONE definition of coarse-bucket membership shared by the value
-    * cascade's 30d branch and the sketch ladders' 30d levels (a
+    * cascade's 30d tier and the sketch ladders' 30d levels (a
     * divergence here would silently desynchronize them).
     */
   private def bucketStart(day: String, widthSeconds: Long): String =
@@ -55,22 +55,30 @@ final class TierRunner(spark: SparkSession, root: String,
 
   private val rawTable = new TierTable(s"$root/tier_raw", spark).init()
   private val blocksTable = new TierTable(s"$root/blocks_5m", spark).init()
+
   // continuous-aggregate sketch tiers, maintained through the SAME
   // watermark/lineage machinery as the rollup cascade (VERDICT r4 #3):
-  // an exact mergeable histogram ladder (1h→1d, per-band sums) and an
-  // HLL distinct-url ladder (1h→1d, register-union) — a distinct-count
-  // or distribution query over years of data reads a day-partitioned
+  // an exact mergeable histogram ladder (per-band sums), an HLL
+  // distinct-url ladder (register union) and a KLL quantile ladder
+  // (sketch merge), each at 1h→1d→30d — a distinct-count or
+  // distribution query over years of data reads a day-partitioned
   // sketch tier, never raw
-  private val histTable1h = new TierTable(s"$root/hist_1h", spark).init()
-  private val histTable1d = new TierTable(s"$root/hist_1d", spark).init()
-  private val hllTable1h = new TierTable(s"$root/hll_1h", spark).init()
-  private val hllTable1d = new TierTable(s"$root/hll_1d", spark).init()
-  private val kllTable1h = new TierTable(s"$root/kll_1h", spark).init()
-  private val kllTable1d = new TierTable(s"$root/kll_1d", spark).init()
-  private val histTable30d = new TierTable(s"$root/hist_30d", spark).init()
-  private val hllTable30d = new TierTable(s"$root/hll_30d", spark).init()
-  private val kllTable30d = new TierTable(s"$root/kll_30d", spark).init()
   private val HistBands = 8
+  /** The three ladders share one finest-level pass over these measures;
+    * each ladder's table keeps its own columns of it. */
+  private val sketchMeasures =
+    Rollup.hist(HistBands) ++ Seq(Rollup.urlSketch, Rollup.valueSketch, Rollup.rowCount)
+  private val sketchLadders: Seq[(String, Seq[String])] = Seq(
+    "hist" -> Rollup.hist(HistBands).map(_.name),
+    "hll" -> Seq(Rollup.urlSketch.name, Rollup.rowCount.name),
+    "kll" -> Seq(Rollup.valueSketch.name, Rollup.rowCount.name))
+  private val sketchTiers = Seq(TierSpec.T1h, TierSpec.T1d, TierSpec.T30d)
+  /** Stage key and table directory of a (ladder, tier), e.g. `hll_1d`. */
+  private def sketchKey(ladder: String, t: TierSpec): String = s"${ladder}_${t.name}"
+  private val sketchTables: Map[String, TierTable] =
+    (for ((ladder, _) <- sketchLadders; t <- sketchTiers)
+      yield sketchKey(ladder, t) ->
+        new TierTable(s"$root/${sketchKey(ladder, t)}", spark).init()).toMap
 
   /** Append a raw increment (new web pages) as a new raw snapshot,
     * partitioned by day. Returns the set of touched day partitions.
@@ -107,8 +115,6 @@ final class TierRunner(spark: SparkSession, root: String,
     touchedDays
   }
 
-  def rawSnapshot: Option[Long] = rawTable.currentSnapshotId
-
   /** Total rows in the current raw snapshot (manifest metadata, no scan). */
   def rawRows: Long = rawTable.currentManifest.map(_.totalRows).getOrElse(0L)
 
@@ -133,98 +139,19 @@ final class TierRunner(spark: SparkSession, root: String,
     val inputSnapshot = rawTable.currentSnapshotId.getOrElse(
       throw new IllegalStateException("no raw snapshot ingested"))
 
-    var entries = Vector.newBuilder[RunEntry]
+    val entries = Vector.newBuilder[RunEntry]
 
-    // Dependency-aware failure isolation: if a tier's commit (or its
-    // snapshot read) fails, every tier downstream of it is recorded as
+    // Dependency-aware failure isolation: if a stage's commit (or its
+    // snapshot read) fails, every stage downstream of it is recorded as
     // skipped:upstream_failed rather than silently rebuilt from the
     // previous (stale) snapshot and marked ok with lineage pointing at
     // the new input — the checkpoint manifest must never misrepresent
-    // which tiers reflect the current input.
+    // which tables reflect the current input.
     val failed = scala.collection.mutable.Set[String]()
 
-    // ---- 5m from raw (only touched days), then the cascade ----
-    var finer: DataFrame = null
-    for (tier <- TierSpec.cascade) {
-      val tbl = tableFor(tier)
-      val key = s"${tier.name}"
-      val upstream: Option[String] = tier match {
-        case TierSpec.T5m => None
-        case TierSpec.T1h => Some(TierSpec.T5m.name)
-        case TierSpec.T1d => Some(TierSpec.T1h.name)
-        case _            => Some(TierSpec.T1d.name)
-      }
-      val partitions: Set[String] =
-        if (tier.seconds <= TierSpec.T1d.seconds) touchedDays
-        else touchedDays.map(bucketStart(_, tier.seconds)) // containing 30d buckets
-      val already = partitions.filter(p => previous.get(s"$key/$p").contains("ok"))
-      val todo = partitions -- already
-      val t0 = System.nanoTime()
-      def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-      if (todo.nonEmpty) {
-        if (upstream.exists(failed.contains)) {
-          failed += key
-          todo.foreach(p => entries += RunEntry(key, p, 0L, "skipped:upstream_failed", 0L))
-        } else try {
-          val source: DataFrame =
-            if (tier == TierSpec.T5m) {
-              // flagged measures: three-state missingness (OK/NODATA/
-              // UNDETECT counts, OK-only value aggregates) travels the
-              // whole production cascade. text_sha: the byte-identical-
-              // text invariant, hashed from the html payload per raw
-              // row and XOR-folded up every tier. saltBuckets (skew
-              // mode for Zipf-head domains) switches to the two-phase
-              // salted aggregation — spec-pinned equal.
-              val sha = Some(xxhash64(
-                graft.ingest.WebPages.extractText(col("html"))))
-              saltBuckets match {
-                case Some(k) => Rollup.fromRawFlaggedSalted(
-                  rawTable.read(touchedDays), tier, k, textSha = sha)
-                case None => Rollup.fromRawFlagged(
-                  rawTable.read(touchedDays), tier, textSha = sha)
-              }
-            }
-            else if (tier.seconds <= TierSpec.T1d.seconds)
-              Rollup.cascadeFlagged(finer, tier)
-            else {
-              // 30d: rebuild whole 30d buckets — read exactly the 1d
-              // day partitions that are members of a touched bucket
-              val members = memberDays(tableFor(TierSpec.T1d), todo, tier.seconds)
-              Rollup.cascadeFlagged(tableFor(TierSpec.T1d).read(members), tier)
-            }
-          val withPart = source.withColumn("day_epoch",
-            if (tier.seconds <= TierSpec.T1d.seconds)
-              col("bucket_epoch") - (col("bucket_epoch") % TierSpec.T1d.seconds)
-            else col("bucket_epoch"))
-          val lineage = todo.map(p =>
-            p -> PartitionLineage(inputSnapshot, "ok")).toMap
-          val m = tbl.commitOverwrite(withPart, "day_epoch", lineage)
-          val ms = elapsedMs
-          todo.foreach { p =>
-            val rows = m.partitions.get(p).map(_.rows).getOrElse(0L)
-            entries += RunEntry(key, p, rows, "ok", ms)
-          }
-        } catch {
-          case e: Exception =>
-            failed += key
-            todo.foreach(p => entries += RunEntry(key, p, 0L,
-              s"error:${e.getClass.getSimpleName}", elapsedMs))
-        }
-      }
-      already.foreach(p => entries += RunEntry(key, p, -1L, "ok", 0L)) // resumed
-      if (!failed.contains(key) && tier.seconds <= TierSpec.T1d.seconds) {
-        // pruned read of exactly the touched partitions; a missing
-        // snapshot (first-ever run whose commit failed) degrades to a
-        // recorded failure, never an unhandled crash
-        try finer = tbl.read(touchedDays)
-        catch { case _: IllegalStateException => failed += key }
-      }
-    }
-
-    // Shared stage harness for the non-cascade tiers (blocks + sketch
-    // ladders): resume-skip, dependency-aware failure isolation, one
-    // copy-on-write commit, per-partition lineage + metrics — identical
-    // semantics to the cascade loop above.
+    // The one stage harness for every table a run maintains: resume-
+    // skip, dependency-aware failure isolation, one copy-on-write
+    // commit, per-partition lineage + metrics.
     def runStage(key: String, upstream: Option[String],
                  table: TierTable,
                  partitions: Set[String] = touchedDays)
@@ -254,10 +181,44 @@ final class TierRunner(spark: SparkSession, root: String,
       } catch {
         case e: Exception =>
           failed += key
-          todo.foreach(p => entries += RunEntry(key, p, 0L,
-            s"error:${e.getClass.getSimpleName}", elapsedMs))
+          val status = RunManifest.errorStatus(e)
+          todo.foreach(p => entries += RunEntry(key, p, 0L, status, elapsedMs))
       }
     }
+
+    // Day is the partition unit of every table below 30d; a 30d level
+    // rebuilds whole 30d buckets from every member day of a touched
+    // bucket still present in the finer table.
+    def partitionsAt(tier: TierSpec): Set[String] =
+      if (tier.seconds <= TierSpec.T1d.seconds) touchedDays
+      else touchedDays.map(bucketStart(_, tier.seconds))
+    def finerRows(finer: TierTable, tier: TierSpec, todo: Set[String]): DataFrame =
+      finer.read(
+        if (tier.seconds <= TierSpec.T1d.seconds) todo
+        else memberDays(finer, todo, tier.seconds))
+    def dayOf(c: Column): Column = c - (c % TierSpec.T1d.seconds)
+
+    // ---- value cascade: 5m from the touched raw days, each coarser
+    // tier by MERGE of the finer tier. Flagged measures: three-state
+    // missingness (OK/NODATA/UNDETECT counts, OK-only value aggregates)
+    // travels the whole production cascade. text_sha: the byte-
+    // identical-text invariant, hashed from the html payload per raw row
+    // and XOR-folded up every tier. saltBuckets (skew mode for Zipf-head
+    // domains) switches 5m to the two-phase salted aggregation —
+    // spec-pinned equal.
+    runStage(TierSpec.T5m.name, None, tableFor(TierSpec.T5m)) { todo =>
+      Rollup.fromRaw(rawTable.read(todo), TierSpec.T5m,
+          textSha = Some(xxhash64(graft.ingest.WebPages.extractText(col("html")))),
+          measures = Rollup.flagged, saltBuckets = saltBuckets)
+        .withColumn("day_epoch", dayOf(col("bucket_epoch")))
+    }
+    for ((finer, tier) <- TierSpec.cascade.zip(TierSpec.cascade.tail))
+      runStage(tier.name, Some(finer.name), tableFor(tier), partitionsAt(tier)) { todo =>
+        Rollup.cascade(finerRows(tableFor(finer), tier, todo), tier)
+          .withColumn("day_epoch",
+            if (tier.seconds <= TierSpec.T1d.seconds) dayOf(col("bucket_epoch"))
+            else col("bucket_epoch"))
+      }
 
     // ---- Gorilla value blocks: one compressed binary block per
     // (series, day) over the 5m points (north-star binary column) ----
@@ -270,7 +231,7 @@ final class TierRunner(spark: SparkSession, root: String,
     // (series, day), so decode re-aligns them positionally.
     runStage("blocks", Some(TierSpec.T5m.name), blocksTable) { todo =>
       val t5m = tableFor(TierSpec.T5m).read(todo)
-      def enc(v: org.apache.spark.sql.Column) =
+      def enc(v: Column) =
         graft.codec.GorillaAgg.gorillaEncode(col("bucket_epoch"), v)
       t5m.groupBy(col("domain"), col("day_epoch"))
         .agg(
@@ -282,12 +243,10 @@ final class TierRunner(spark: SparkSession, root: String,
     }
 
     // ---- Sketch ladders: finest level from the touched raw days, the
-    // coarser level by MERGE of the finer tier (per-band sums / HLL
-    // register union) — never a raw re-scan. Day is the partition unit
-    // at both levels, so I1/I2 watermark recompute and late-data
-    // partition rebuilds work exactly as for the value cascade.
-    def dayCol(c: org.apache.spark.sql.Column) =
-      c - (c % TierSpec.T1d.seconds)
+    // coarser levels by MERGE of the finer tier (per-band sums / HLL
+    // register union / KLL merge) — never a raw re-scan, so I1/I2
+    // watermark recompute and late-data partition rebuilds work exactly
+    // as for the value cascade.
     // The three finest-level ladders share one grouping key, so ONE
     // raw pass (one scan + one shuffle, built lazily and only if some
     // 1h stage actually has work) feeds all three commits; each stage
@@ -295,59 +254,30 @@ final class TierRunner(spark: SparkSession, root: String,
     // unpersisted below.
     var sketch1h: Option[DataFrame] = None
     def sketch1hFrame: DataFrame = sketch1h.getOrElse {
-      val f = Sketches.allFromRaw(
-          rawTable.read(touchedDays)
-            .withColumn("value_micros", Rollup.micros(col("value"))),
-          TierSpec.T1h, "value_micros", HistBands)
-        .withColumn("day_epoch", dayCol(col("bucket_epoch")))
+      val f = Rollup.fromRaw(rawTable.read(touchedDays), TierSpec.T1h,
+          measures = sketchMeasures)
+        .withColumn("day_epoch", dayOf(col("bucket_epoch")))
         .persist()
       sketch1h = Some(f)
       f
     }
-    def sketchCols(names: Seq[String])(todo: Set[String]): DataFrame =
-      sketch1hFrame
-        .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
-        .select(("domain" +: "bucket_epoch" +: names :+ "day_epoch").map(col): _*)
     try {
-      runStage("hist_1h", None, histTable1h)(
-        sketchCols((0 until HistBands).map(i => s"h$i")))
-      runStage("hll_1h", None, hllTable1h)(sketchCols(Seq("key_hll", "n")))
-      runStage("kll_1h", None, kllTable1h)(sketchCols(Seq("val_kll", "n")))
+      for ((ladder, cols) <- sketchLadders) {
+        val key = sketchKey(ladder, TierSpec.T1h)
+        runStage(key, None, sketchTables(key)) { todo =>
+          sketch1hFrame
+            .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
+            .select(("domain" +: "bucket_epoch" +: cols :+ "day_epoch").map(col): _*)
+        }
+      }
     } finally sketch1h.foreach(_.unpersist())
-    runStage("hist_1d", Some("hist_1h"), histTable1d) { todo =>
-      Sketches.histCascade(histTable1h.read(todo), TierSpec.T1d, HistBands)
-        .withColumn("day_epoch", col("bucket_epoch"))
-    }
-    runStage("hll_1d", Some("hll_1h"), hllTable1d) { todo =>
-      Sketches.cascade(hllTable1h.read(todo), TierSpec.T1d)
-        .withColumn("day_epoch", col("bucket_epoch"))
-    }
-    runStage("kll_1d", Some("kll_1h"), kllTable1d) { todo =>
-      Sketches.quantCascade(kllTable1h.read(todo), TierSpec.T1d)
-        .withColumn("day_epoch", col("bucket_epoch"))
-    }
-    // 30d sketch levels mirror the value cascade's 30d branch: whole
-    // 30d buckets are rebuilt by MERGING exactly the 1d partitions that
-    // are members of a touched bucket (register union / per-band sum /
-    // KLL merge — still never a raw re-scan).
-    val touched30d: Set[String] =
-      touchedDays.map(bucketStart(_, TierSpec.T30d.seconds))
-    def members30(tbl: TierTable, todo: Set[String]): Set[String] =
-      memberDays(tbl, todo, TierSpec.T30d.seconds)
-    runStage("hist_30d", Some("hist_1d"), histTable30d, touched30d) { todo =>
-      Sketches.histCascade(histTable1d.read(members30(histTable1d, todo)),
-                           TierSpec.T30d, HistBands)
-        .withColumn("day_epoch", col("bucket_epoch"))
-    }
-    runStage("hll_30d", Some("hll_1d"), hllTable30d, touched30d) { todo =>
-      Sketches.cascade(hllTable1d.read(members30(hllTable1d, todo)),
-                       TierSpec.T30d)
-        .withColumn("day_epoch", col("bucket_epoch"))
-    }
-    runStage("kll_30d", Some("kll_1d"), kllTable30d, touched30d) { todo =>
-      Sketches.quantCascade(kllTable1d.read(members30(kllTable1d, todo)),
-                            TierSpec.T30d)
-        .withColumn("day_epoch", col("bucket_epoch"))
+    for ((finer, tier) <- sketchTiers.zip(sketchTiers.tail);
+         (ladder, _) <- sketchLadders) {
+      val (key, finerKey) = (sketchKey(ladder, tier), sketchKey(ladder, finer))
+      runStage(key, Some(finerKey), sketchTables(key), partitionsAt(tier)) { todo =>
+        Rollup.cascade(finerRows(sketchTables(finerKey), tier, todo), tier)
+          .withColumn("day_epoch", col("bucket_epoch"))
+      }
     }
 
     val manifest = RunManifest(runId, inputSnapshot, entries.result(),
@@ -386,24 +316,19 @@ final class TierRunner(spark: SparkSession, root: String,
     // ladders age out on their own horizons (blocks usually share the
     // 5m tier's; raw is the replay/backfill buffer) — all
     // day-partitioned, same manifest-only mechanism
+    def sketches(days: Option[Int], tiers: Seq[TierSpec]) =
+      for (d <- days.toSeq; (ladder, _) <- sketchLadders; t <- tiers)
+        yield sketchKey(ladder, t) ->
+          dropOld(sketchTables(sketchKey(ladder, t)), d, keepSnapshots)
     val extra =
       keepBlockDays.map(d => "blocks" -> dropOld(blocksTable, d, keepSnapshots)) ++
       keepRawDays.map(d => "raw" -> dropOld(rawTable, d, keepSnapshots)) ++
-      keepSketchDays.toSeq.flatMap(d => Seq(
-        "hist_1h" -> dropOld(histTable1h, d, keepSnapshots),
-        "hist_1d" -> dropOld(histTable1d, d, keepSnapshots),
-        "hll_1h" -> dropOld(hllTable1h, d, keepSnapshots),
-        "hll_1d" -> dropOld(hllTable1d, d, keepSnapshots),
-        "kll_1h" -> dropOld(kllTable1h, d, keepSnapshots),
-        "kll_1d" -> dropOld(kllTable1d, d, keepSnapshots))) ++
+      sketches(keepSketchDays, sketchTiers.init) ++
       // the COARSEST sketch level outlives the finer ones (the whole
       // point of the ladder) — it ages out only under its own knob,
       // never under the day-scale keepSketchDays, which would drop
       // every 30d bucket but the newest
-      keepSketch30dDays.toSeq.flatMap(d => Seq(
-        "hist_30d" -> dropOld(histTable30d, d, keepSnapshots),
-        "hll_30d" -> dropOld(hllTable30d, d, keepSnapshots),
-        "kll_30d" -> dropOld(kllTable30d, d, keepSnapshots)))
+      sketches(keepSketch30dDays, Seq(TierSpec.T30d))
     tiers ++ extra
   }
 
@@ -438,7 +363,7 @@ final class TierRunner(spark: SparkSession, root: String,
     // day (5 bits, 0..23) keeps both dimensions in play; within an
     // (hour, bucket) cell, warc_epoch stays contiguous enough for
     // parquet column stats to prune sub-hour time predicates too.
-    rawTable.compactPartitionsZOrderExpr(days,
+    rawTable.compactPartitionsZOrder(days,
       col("url_bucket"),
       ((col("warc_epoch") % TierSpec.T1d.seconds) / 3600L).cast("long"),
       bits = 5, filesPerPartition = filesPerPartition)
@@ -448,31 +373,17 @@ final class TierRunner(spark: SparkSession, root: String,
   def tier(t: TierSpec): DataFrame = tableFor(t).read()
 
   /** Read the exact histogram sketch tier (1h/1d/30d bands ladder). */
-  def histTier(t: TierSpec): DataFrame = t match {
-    case TierSpec.T1h => histTable1h.read()
-    case TierSpec.T1d => histTable1d.read()
-    case TierSpec.T30d => histTable30d.read()
-    case other => throw new IllegalArgumentException(
-      s"no histogram tier at ${other.name}")
-  }
+  def histTier(t: TierSpec): DataFrame = sketchTier("hist", t)
 
   /** Read the HLL distinct-url sketch tier (1h/1d/30d ladder). */
-  def hllTier(t: TierSpec): DataFrame = t match {
-    case TierSpec.T1h => hllTable1h.read()
-    case TierSpec.T1d => hllTable1d.read()
-    case TierSpec.T30d => hllTable30d.read()
-    case other => throw new IllegalArgumentException(
-      s"no HLL tier at ${other.name}")
-  }
+  def hllTier(t: TierSpec): DataFrame = sketchTier("hll", t)
 
   /** Read the KLL quantile sketch tier (1h/1d/30d ladder). */
-  def kllTier(t: TierSpec): DataFrame = t match {
-    case TierSpec.T1h => kllTable1h.read()
-    case TierSpec.T1d => kllTable1d.read()
-    case TierSpec.T30d => kllTable30d.read()
-    case other => throw new IllegalArgumentException(
-      s"no KLL tier at ${other.name}")
-  }
+  def kllTier(t: TierSpec): DataFrame = sketchTier("kll", t)
+
+  private def sketchTier(ladder: String, t: TierSpec): DataFrame =
+    sketchTables.getOrElse(sketchKey(ladder, t),
+      throw new IllegalArgumentException(s"no $ladder tier at ${t.name}")).read()
 
   /** Read the per-(series, day) Gorilla value blocks. */
   def blocks(): DataFrame = blocksTable.read()
@@ -536,11 +447,24 @@ final case class RunManifest(runId: String, inputSnapshot: Long,
 }
 
 object RunManifest {
+  /** Status of a failed stage: `error:<SimpleName>: <root-cause
+    * message>`, the message cut to its first non-blank line with
+    * control characters blanked, so the entry stays one JSON line.
+    */
+  def errorStatus(e: Throwable): String = {
+    val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
+    val msg = Option(root.getMessage).toSeq
+      .flatMap(_.linesIterator.map(_.trim)).find(_.nonEmpty).getOrElse("")
+    s"error:${e.getClass.getSimpleName}: ${msg.replaceAll("\\p{Cntrl}", " ")}"
+  }
+
   /** partition-status map "tier/partition" -> status. */
   def parseStatuses(json: String): Map[String, String] = {
-    val re = ("\\{\"tier\":\"([^\"]*)\",\"partition\":\"([^\"]*)\"," +
-      "\"rows\":(-?\\d+),\"status\":\"([^\"]*)\"(?:,\"elapsed_ms\":(-?\\d+))?\\}").r
-    re.findAllMatchIn(json)
-      .map(m => s"${m.group(1)}/${m.group(2)}" -> m.group(4)).toMap
+    val str = "\"((?:[^\"\\\\]|\\\\.)*)\""
+    val re = ("\\{\"tier\":" + str + ",\"partition\":" + str + "," +
+      "\"rows\":(-?\\d+),\"status\":" + str + "(?:,\"elapsed_ms\":(-?\\d+))?\\}").r
+    def unescape(s: String) = s.replaceAll("\\\\(.)", "$1")
+    re.findAllMatchIn(json).map(m =>
+      s"${unescape(m.group(1))}/${unescape(m.group(2))}" -> unescape(m.group(4))).toMap
   }
 }

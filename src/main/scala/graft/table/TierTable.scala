@@ -2,7 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-shaped snapshot/manifest table layer over Parquet
@@ -362,44 +362,38 @@ final class TierTable(val root: String, spark: SparkSession) {
     * directories are reclaimed by [[expireSnapshots]].
     */
   def compactPartitions(partitions: Set[String],
-                        filesPerPartition: Int = 1): Manifest = {
-    require(filesPerPartition >= 1, "need at least one file per partition")
-    val m = currentManifest.getOrElse(
-      throw new IllegalStateException(s"no snapshot at $root"))
-    val present = partitions.filter(k =>
-      m.partitions.get(k).exists(_.path.nonEmpty))
-    if (present.isEmpty) return m
-    // hash-cluster on (partition, deterministic row-hash split): a
-    // partition's rows land in ≤ filesPerPartition hash buckets (≤ that
-    // many files), and distinct (partition, split) pairs spread over
-    // filesPerPartition × |partitions| tasks — a multi-GB day partition
-    // is rewritten in parallel, not by one task. The split key hashes
-    // the full row (deterministic, content-derived), so the rewrite
-    // stays reproducible.
-    val base = readManifest(m, Some(present))
-    val split = pmod(
-      expr(s"xxhash64(${base.columns.sorted.map(c => s"`$c`").mkString(",")})"),
-      lit(filesPerPartition))
-    val df = base
-      .repartition(filesPerPartition * present.size,
-                   col(m.partitionCol), split)
-    commitOverwrite(df, m.partitionCol,
-      present.map(k => k -> (m.partitions(k).lineage match {
-        case Some(l) => l.copy(status = "compacted")
-        case None    => PartitionLineage(m.snapshot, "compacted")
-      })).toMap)
-  }
+                        filesPerPartition: Int = 1): Manifest =
+    rewritePartitions(partitions, filesPerPartition, "compacted") {
+      (base, partitionCol, tasks) =>
+        // hash-cluster on (partition, deterministic row-hash split): a
+        // partition's rows land in ≤ filesPerPartition hash buckets (≤
+        // that many files), and distinct (partition, split) pairs spread
+        // over filesPerPartition × |partitions| tasks — a multi-GB day
+        // partition is rewritten in parallel, not by one task. The split
+        // key hashes the full row (deterministic, content-derived), so
+        // the rewrite stays reproducible.
+        val split = pmod(
+          expr(s"xxhash64(${base.columns.sorted.map(c => s"`$c`").mkString(",")})"),
+          lit(filesPerPartition))
+        base.repartition(tasks, col(partitionCol), split)
+    }
 
   /** Z-order variant of [[compactPartitions]] — the Iceberg
     * rewrite-data-files(sort-order=zorder(x, y)) analog, actually
     * applied to the file LAYOUT: each partition's rows are re-split by
-    * equal-width ranges of the Morton interleave of (`xCol`, `yCol`)
-    * ([[graft.functions.ZOrder.zValue]]) and sorted by it within every
-    * task, so each output file covers a small box in BOTH dimensions.
-    * A scan filtered on either dimension (or a box) can then prune most
-    * files by their per-file column min/max — where the hash split of
-    * [[compactPartitions]] leaves every file spanning the full range of
-    * both (spec-pinned, including the pruning win).
+    * equal-width ranges of the Morton interleave of the clustering
+    * dimensions `x` and `y` ([[graft.functions.ZOrder.zValue]]) and
+    * sorted by it within every task, so each output file covers a small
+    * box in BOTH dimensions. A scan filtered on either dimension (or a
+    * box) can then prune most files by their per-file column min/max —
+    * where the hash split of [[compactPartitions]] leaves every file
+    * spanning the full range of both (spec-pinned, including the
+    * pruning win).
+    *
+    * The dimensions may be plain columns or derived expressions (e.g.
+    * hour-of-day from an epoch column); they are evaluated per row for
+    * the split/sort only and never stored. Both must be deterministic
+    * functions of the row, non-negative, and < 2^bits.
     *
     * Content-preserving: per-partition rows and order-insensitive
     * checksums are unchanged (spec-pinned). File BOUNDARIES come from
@@ -409,41 +403,42 @@ final class TierTable(val root: String, spark: SparkSession) {
     * reproducible contract here (the hash sibling keeps the stronger
     * per-file determinism for checksum-sensitive rewrites).
     */
-  def compactPartitionsZOrder(partitions: Set[String], xCol: String,
-                              yCol: String, bits: Int = 16,
+  def compactPartitionsZOrder(partitions: Set[String],
+                              x: Column, y: Column,
+                              bits: Int = 16,
                               filesPerPartition: Int = 8): Manifest =
-    compactPartitionsZOrderExpr(partitions, col(xCol), col(yCol), bits,
-                                filesPerPartition)
+    rewritePartitions(partitions, filesPerPartition, "zorder-compacted") {
+      (base, partitionCol, tasks) =>
+        val z = graft.functions.ZOrder.zValue(x, y, bits)
+        // one contiguous (partition, z)-range per task → one file per
+        // task under the partition dir, each covering a small box in
+        // both dims
+        base.repartitionByRange(tasks, col(partitionCol), z)
+          .sortWithinPartitions(col(partitionCol), z)
+    }
 
-  /** [[compactPartitionsZOrder]] with derived clustering DIMENSIONS
-    * (e.g. minute-of-day from an epoch column) — the expressions are
-    * evaluated per row for the split/sort only and never stored, so
-    * content neutrality is unchanged. Both must be deterministic
-    * functions of the row, non-negative, and < 2^bits.
+  /** Content-neutral rewrite of the given partitions present in the
+    * current snapshot: `layout(rows, partitionCol, tasks)` re-splits
+    * their rows over `filesPerPartition × |partitions|` tasks, and the
+    * result is committed with each partition's lineage relabelled to
+    * `status`.
     */
-  def compactPartitionsZOrderExpr(partitions: Set[String],
-                                  x: org.apache.spark.sql.Column,
-                                  y: org.apache.spark.sql.Column,
-                                  bits: Int = 16,
-                                  filesPerPartition: Int = 8): Manifest = {
+  private def rewritePartitions(partitions: Set[String], filesPerPartition: Int,
+                                status: String)
+                               (layout: (DataFrame, String, Int) => DataFrame)
+      : Manifest = {
     require(filesPerPartition >= 1, "need at least one file per partition")
     val m = currentManifest.getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     val present = partitions.filter(k =>
       m.partitions.get(k).exists(_.path.nonEmpty))
     if (present.isEmpty) return m
-    val base = readManifest(m, Some(present))
-    val z = graft.functions.ZOrder.zValue(x, y, bits)
-    // one contiguous (partition, z)-range per task → one file per task
-    // under the partition dir, each covering a small box in both dims
-    val df = base
-      .repartitionByRange(filesPerPartition * present.size,
-                          col(m.partitionCol), z)
-      .sortWithinPartitions(col(m.partitionCol), z)
+    val df = layout(readManifest(m, Some(present)), m.partitionCol,
+                    filesPerPartition * present.size)
     commitOverwrite(df, m.partitionCol,
       present.map(k => k -> (m.partitions(k).lineage match {
-        case Some(l) => l.copy(status = "zorder-compacted")
-        case None    => PartitionLineage(m.snapshot, "zorder-compacted")
+        case Some(l) => l.copy(status = status)
+        case None    => PartitionLineage(m.snapshot, status)
       })).toMap)
   }
 

@@ -30,17 +30,17 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     // the pinned contract: state counts sum; value measures are OK-only
     // and merge null-skipping — so any cascade composition equals the
     // direct flagged rollup at the same tier
-    var finer = Rollup.fromRawFlagged(pages, TierSpec.T5m)
+    var finer = Rollup.fromRaw(pages, TierSpec.T5m, measures = Rollup.flagged)
     for (tier <- TierSpec.cascade.tail) {
-      finer = Rollup.cascadeFlagged(finer, tier)
-      val direct = Rollup.fromRawFlagged(pages, tier)
+      finer = Rollup.cascade(finer, tier)
+      val direct = Rollup.fromRaw(pages, tier, measures = Rollup.flagged)
       assert(finer.exceptAll(direct).isEmpty && direct.exceptAll(finer).isEmpty,
         s"flagged merge != direct at ${tier.name}")
     }
   }
 
   test("flagged measures: NODATA/UNDETECT rows never contaminate value aggregates") {
-    val flagged = Rollup.fromRawFlagged(pages, TierSpec.T1h)
+    val flagged = Rollup.fromRaw(pages, TierSpec.T1h, measures = Rollup.flagged)
     val okOnly = Rollup.fromRaw(
       pages.filter(col("flag") === Flag.OK.toInt), TierSpec.T1h)
       .select(col("domain"), col("bucket_epoch"),
@@ -64,15 +64,27 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
 
   test("salted flagged rollup equals unsalted (with text_sha) — skew mode is free") {
     val sha = Some(xxhash64(WebPages.extractText(col("html"))))
-    val plain = Rollup.fromRawFlagged(pages, TierSpec.T1h, textSha = sha)
-    val salted = Rollup.fromRawFlaggedSalted(pages, TierSpec.T1h, 8, textSha = sha)
+    val plain = Rollup.fromRaw(pages, TierSpec.T1h, textSha = sha,
+                               measures = Rollup.flagged)
+    val salted = Rollup.fromRaw(pages, TierSpec.T1h, textSha = sha,
+                                measures = Rollup.flagged, saltBuckets = Some(8))
     assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
   }
 
   test("salted rollup equals unsalted rollup") {
     val plain = Rollup.fromRaw(pages, TierSpec.T1h)
-    val salted = Rollup.fromRawSalted(pages, TierSpec.T1h, saltBuckets = 7)
+    val salted = Rollup.fromRaw(pages, TierSpec.T1h, saltBuckets = Some(7))
     assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
+  }
+
+  test("cascade merges only measure columns, in order, and refuses a frame with none") {
+    val keysFirst = r5m.select("n", "max_value_micros", "domain", "bucket_epoch")
+    assert(Rollup.cascade(keysFirst, TierSpec.T1h).columns.toSeq ==
+      Seq("domain", "bucket_epoch", "n", "max_value_micros"))
+    val e = intercept[IllegalArgumentException] {
+      Rollup.cascade(r5m.select("domain", "bucket_epoch"), TierSpec.T1h)
+    }
+    assert(e.getMessage.contains("no measure column"), e.getMessage)
   }
 
   test("bucket starts are tier-aligned") {

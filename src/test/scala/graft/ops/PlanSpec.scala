@@ -182,8 +182,9 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("flagged rollup keeps the partial-agg + two-exchange cascade shape") {
-    val p = plan(Rollup.cascadeFlagged(
-      Rollup.fromRawFlagged(WebPages.load(spark, sfDir), TierSpec.T5m),
+    val p = plan(Rollup.cascade(
+      Rollup.fromRaw(WebPages.load(spark, sfDir), TierSpec.T5m,
+        measures = Rollup.flagged),
       TierSpec.T1h))
     assert(p.contains("partial_sum") || p.contains("partial_count"), p.take(800))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 2)
@@ -251,8 +252,8 @@ class PlanSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("salted rollup phase 1 keys include the salt (skew spread)") {
-    val o = optimized(Rollup.fromRawSalted(
-      WebPages.load(spark, sfDir), TierSpec.T1h, saltBuckets = 8))
+    val o = optimized(Rollup.fromRaw(
+      WebPages.load(spark, sfDir), TierSpec.T1h, saltBuckets = Some(8)))
     assert(o.contains("_salt"), o.take(800))
   }
 

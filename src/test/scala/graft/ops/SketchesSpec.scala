@@ -12,14 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SketchesSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val pages = WebPages.load(spark, sfDir).cache()
+  private val urls = Seq(Rollup.urlSketch, Rollup.rowCount)
 
   test("cascaded sketch estimate == direct sketch estimate (lossless merge)") {
     val cascaded = Sketches.estimated(
-      Sketches.cascade(
-        Sketches.cascade(Sketches.fromRaw(pages, TierSpec.T5m), TierSpec.T1h),
+      Rollup.cascade(
+        Rollup.cascade(Rollup.fromRaw(pages, TierSpec.T5m, measures = urls),
+                       TierSpec.T1h),
         TierSpec.T1d))
       .select("domain", "bucket_epoch", "distinct_est")
-    val direct = Sketches.estimated(Sketches.fromRaw(pages, TierSpec.T1d))
+    val direct = Sketches.estimated(Rollup.fromRaw(pages, TierSpec.T1d, measures = urls))
       .select("domain", "bucket_epoch", "distinct_est")
     assert(cascaded.exceptAll(direct).isEmpty &&
            direct.exceptAll(cascaded).isEmpty)
@@ -27,8 +29,10 @@ class SketchesSpec extends AnyFunSuite with SparkSuite {
 
   test("KLL quantile tier: merged estimates exact for buffer-sized buckets, elements always") {
     val p = pages.withColumn("value_micros", Rollup.micros(col("value")))
-    val merged = Sketches.quantEstimated(
-      Sketches.quantCascade(Sketches.quantFromRaw(p, TierSpec.T1h), TierSpec.T1d))
+    val merged = Sketches.quantEstimated(Rollup.cascade(
+      Rollup.fromRaw(p, TierSpec.T1h,
+                     measures = Seq(Rollup.valueSketch, Rollup.rowCount)),
+      TierSpec.T1d))
     // exact discrete quantiles per (domain, day) for comparison
     val exact = p
       .groupBy(col("domain"), Rollup.bucket(col("warc_epoch"), TierSpec.T1d))
@@ -50,10 +54,10 @@ class SketchesSpec extends AnyFunSuite with SparkSuite {
 
   test("histogram tier: cascade equals direct exactly; band counts conserve rows") {
     val p = pages.withColumn("value_micros", Rollup.micros(col("value")))
-    val direct = Sketches.histFromRaw(p, TierSpec.T1d, "value_micros", 8)
-    val cascaded = Sketches.histCascade(
-      Sketches.histFromRaw(p, TierSpec.T1h, "value_micros", 8),
-      TierSpec.T1d, 8)
+    val direct = Rollup.fromRaw(p, TierSpec.T1d, measures = Rollup.hist(8))
+    val cascaded = Rollup.cascade(
+      Rollup.fromRaw(p, TierSpec.T1h, measures = Rollup.hist(8)),
+      TierSpec.T1d)
     assert(cascaded.exceptAll(direct).isEmpty &&
            direct.exceptAll(cascaded).isEmpty)
     // every row lands in exactly one band
@@ -62,7 +66,7 @@ class SketchesSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("estimates are within 5% of exact distinct counts") {
-    val est = Sketches.estimated(Sketches.fromRaw(pages, TierSpec.T1d))
+    val est = Sketches.estimated(Rollup.fromRaw(pages, TierSpec.T1d, measures = urls))
     val exact = pages
       .groupBy(col("domain"), Rollup.bucket(col("warc_epoch"), TierSpec.T1d))
       .agg(countDistinct(col("url")).as("exact"))

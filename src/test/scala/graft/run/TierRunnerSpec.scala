@@ -38,10 +38,10 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(m2.okCount > 0)
 
     // Every tier must equal a from-scratch rollup of the full input.
-    val full5m = Rollup.fromRawFlagged(pages, TierSpec.T5m)
-    val full1h = Rollup.cascadeFlagged(full5m, TierSpec.T1h)
-    val full1d = Rollup.cascadeFlagged(full1h, TierSpec.T1d)
-    val full30d = Rollup.cascadeFlagged(full1d, TierSpec.T30d)
+    val full5m = Rollup.fromRaw(pages, TierSpec.T5m, measures = Rollup.flagged)
+    val full1h = Rollup.cascade(full5m, TierSpec.T1h)
+    val full1d = Rollup.cascade(full1h, TierSpec.T1d)
+    val full30d = Rollup.cascade(full1d, TierSpec.T30d)
     val cols = Seq("domain", "bucket_epoch", "n", "sum_chars",
                    "sum_value_micros", "min_value_micros", "max_value_micros")
       .map(col)
@@ -75,8 +75,9 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(touched == Set((1704412800L).toString)) // 2024-01-05 epoch day
     runner.run("r2", touched)
 
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
+    val full1d = Rollup.cascade(
+      Rollup.cascade(Rollup.fromRaw(pages, TierSpec.T5m, measures = Rollup.flagged),
+                     TierSpec.T1h),
       TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "sum_chars",
                    "sum_value_micros", "min_value_micros", "max_value_micros")
@@ -123,9 +124,9 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     }
     // and the maintained 1d histogram equals the direct full-data one
     val p = pages.withColumn("value_micros", Rollup.micros(col("value")))
-    val direct = graft.ops.Sketches.histCascade(
-      graft.ops.Sketches.histFromRaw(p, TierSpec.T1h, "value_micros", 8),
-      TierSpec.T1d, 8)
+    val direct = Rollup.cascade(
+      Rollup.fromRaw(p, TierSpec.T1h, measures = Rollup.hist(8)),
+      TierSpec.T1d)
     val cols = (Seq("domain", "bucket_epoch") ++ (0 until 8).map(i => s"h$i"))
       .map(col)
     assert(sortedRows(runner.histTier(TierSpec.T1d).select(cols: _*)) ==
@@ -186,9 +187,10 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     val pages = WebPages.load(spark, sfDir)
     runner.run("r1", runner.ingest(pages))
     val direct = {
-      val t5m = Rollup.fromRawFlagged(pages, TierSpec.T5m,
-        textSha = Some(xxhash64(WebPages.extractText(col("html")))))
-      Rollup.cascadeFlagged(Rollup.cascadeFlagged(t5m, TierSpec.T1h), TierSpec.T1d)
+      val t5m = Rollup.fromRaw(pages, TierSpec.T5m,
+        textSha = Some(xxhash64(WebPages.extractText(col("html")))),
+        measures = Rollup.flagged)
+      Rollup.cascade(Rollup.cascade(t5m, TierSpec.T1h), TierSpec.T1d)
         .select("domain", "bucket_epoch", "text_sha")
     }
     val fromTiers = runner.tier(TierSpec.T1d)
@@ -255,8 +257,9 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     assert(runner.rawRows == rows1,
       "replayed increment must not duplicate raw rows")
     runner.run("r1", d1)
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
+    val full1d = Rollup.cascade(
+      Rollup.cascade(Rollup.fromRaw(pages, TierSpec.T5m, measures = Rollup.flagged),
+                     TierSpec.T1h),
       TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "sum_value_micros").map(col)
     assert(sortedRows(runner.tier(TierSpec.T1d).select(cols: _*)) ==
@@ -271,12 +274,39 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     val m = runner.run("r1", runner.ingest(pages.drop("value")))
     val byTier = m.entries.groupBy(_.tier).view.mapValues(_.map(_.status).toSet)
     assert(byTier("5m").forall(_.startsWith("error:")), byTier.toMap.toString)
+    // the entry names its cause: the exception and the missing column
+    assert(byTier("5m").forall(st =>
+      st.matches("error:\\w*AnalysisException: .*") && st.contains("`value`")),
+      byTier("5m").toString)
     for (t <- Seq("1h", "1d", "30d", "blocks"))
       assert(byTier(t) == Set("skipped:upstream_failed"),
         s"$t: ${byTier(t)}")
     // the checkpoint manifest was still written (no unhandled crash)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$root/checkpoints/run-r1.json")))
+  }
+
+  test("partial resume recomputes only the stages missing from the checkpoint") {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    val days = runner.ingest(WebPages.load(spark, sfDir))
+    val m1 = runner.run("r1", days)
+    val (before1d, before30d) =
+      (sortedRows(runner.tier(TierSpec.T1d)), sortedRows(runner.tier(TierSpec.T30d)))
+    // a run that died after the 1h commit: its checkpoint has no 1d/30d
+    val ckpt = java.nio.file.Paths.get(s"$root/checkpoints/run-r1.json")
+    java.nio.file.Files.writeString(ckpt,
+      m1.copy(entries = m1.entries.filterNot(e => Set("1d", "30d")(e.tier))).toJson)
+    val m2 = runner.run("r1", days)
+    def tierEntries(t: String) = m2.entries.filter(_.tier == t)
+    for (t <- Seq("5m", "1h"))
+      assert(tierEntries(t).nonEmpty && tierEntries(t).forall(_.rows == -1L),
+        s"$t not resumed")
+    for (t <- Seq("1d", "30d"))
+      assert(tierEntries(t).nonEmpty &&
+        tierEntries(t).forall(e => e.status == "ok" && e.rows >= 0), s"$t not recomputed")
+    assert(sortedRows(runner.tier(TierSpec.T1d)) == before1d)
+    assert(sortedRows(runner.tier(TierSpec.T30d)) == before30d)
   }
 
   test("full-rebuild mode recomputes every day partition (modified-days-ago=0 analog)") {
@@ -290,8 +320,9 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     val m = runner.rebuildAll("full")
     assert(m.entries.forall(e => e.status == "ok" && e.rows >= 0),
       "rebuild must recompute (not resume) every partition")
-    val full1d = Rollup.cascadeFlagged(
-      Rollup.cascadeFlagged(Rollup.fromRawFlagged(pages, TierSpec.T5m), TierSpec.T1h),
+    val full1d = Rollup.cascade(
+      Rollup.cascade(Rollup.fromRaw(pages, TierSpec.T5m, measures = Rollup.flagged),
+                     TierSpec.T1h),
       TierSpec.T1d)
     val cols = Seq("domain", "bucket_epoch", "n", "n_ok", "sum_value_micros").map(col)
     assert(sortedRows(runner.tier(TierSpec.T1d).select(cols: _*)) ==
@@ -489,6 +520,18 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     // format version is stamped and round-trips
     assert(tm.toJson.contains(s""""format":${graft.table.Manifest.FormatVersion}"""))
     assert(graft.table.Manifest.fromJson(tm.toJson) == tm)
+  }
+
+  test("run-manifest statuses holding quotes and backslashes round-trip") {
+    val status = """error:X: path "C:\tmp\a" has a \" inside"""
+    val m = RunManifest("r\"1", 3L, Seq(
+      RunEntry("5m", "1", 0L, status, 5L), RunEntry("1h", "1", -1L, "ok", 0L)))
+    assert(RunManifest.parseStatuses(m.toJson) == Map("5m/1" -> status, "1h/1" -> "ok"))
+    // a failure's status is one line, so it stays one JSON string
+    val e = new RuntimeException("wrapper",
+      new IllegalStateException("root \"cause\"\nsecond line"))
+    assert(RunManifest.errorStatus(e) ==
+      "error:RuntimeException: root \"cause\"")
   }
 
   test("rollback repoints CURRENT; post-rollback commits never collide; expiry keeps current") {

@@ -38,7 +38,7 @@ class TierTableLayoutSpec extends AnyFunSuite with SparkSuite {
     val zt = new TierTable(tmpRoot("ztable"), spark).init()
     zt.commitOverwrite(grid(), "day_epoch")
     val before = zt.currentManifest.get.partitions("0")
-    zt.compactPartitionsZOrder(Set("0"), "x", "y", bits = 6,
+    zt.compactPartitionsZOrder(Set("0"), col("x"), col("y"), bits = 6,
                                filesPerPartition = 8)
     // content untouched: rows + order-insensitive checksum survive
     val after = zt.currentManifest.get.partitions("0")
