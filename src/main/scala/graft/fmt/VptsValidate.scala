@@ -1,5 +1,6 @@
 package graft.fmt
 
+import graft.core.Json
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -19,9 +20,10 @@ object VptsValidate {
   final case class ValidationReport(valid: Boolean, rowCount: Long,
                                     errors: Seq[String]) {
     def toJson: String = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s"""{"valid":$valid,"row_count":$rowCount,""" +
-        s""""errors":${errors.map(q).mkString("[", ",", "]")}}"""
+      val o = Json.obj().put("valid", valid).put("row_count", rowCount)
+      val errs = o.putArray("errors")
+      errors.foreach(e => errs.add(e))
+      Json.write(o)
     }
   }
 
@@ -87,12 +89,13 @@ object VptsValidate {
     */
   def descriptorJson(df: DataFrame, name: String, rowCount: Long,
                      v: VptsCsvVersion = VptsCsvV1): String = {
-    val fields = df.schema.fields
-      .map(f => s"""{"name":"${f.name}","type":"string"}""")
-      .mkString("[", ",", "]")
-    s"""{"name":"$name","profile":"tabular-data-resource",""" +
-      s""""vpts_csv_version":"${v.version}","row_count":$rowCount,""" +
-      s""""schema":{"fields":$fields}}"""
+    val o = Json.obj().put("name", name)
+      .put("profile", "tabular-data-resource")
+      .put("vpts_csv_version", v.version).put("row_count", rowCount)
+    val fields = o.putObject("schema").putArray("fields")
+    df.schema.fields.foreach(f =>
+      fields.addObject().put("name", f.name).put("type", "string"))
+    Json.write(o)
   }
 
   /** Validate and, when valid, write `descriptor.json` next to `path`

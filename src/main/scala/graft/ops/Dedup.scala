@@ -67,25 +67,13 @@ object Dedup {
     if (files > 0 && files < slots) df.repartition(slots) else df
   }
 
-  /** Tokenize to the distinct word set. */
-  private def wordSet(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    spread(df).select(col(idCol).as("_id"),
-              explode(array_distinct(split(col(textCol), " "))).as("w"))
-
-  /** Distinct k-word shingles (k=1 degenerates to the word set). Short
-    * documents (< k words) produce their single sub-k shingle, matching
-    * the oracle's guard.
+  /** Distinct k-word shingles per document as a FROM-able DuckDB
+    * subselect body of (_id, w) — the oracle's form of the shingling
+    * the [[graft.functions.WordShingles]] and
+    * [[graft.functions.MinHashSig]] kernels run in-row (k=1 degenerates
+    * to the distinct word set; a document of fewer than k words yields
+    * its single sub-k shingle).
     */
-  private[ops] def shingleSet(df: DataFrame, idCol: String, textCol: String,
-                         k: Int): DataFrame = {
-    if (k <= 1) return wordSet(df, idCol, textCol)
-    // compiled one-pass shingler (the transform/slice/concat_ws
-    // composition was interpreted HOF work — see WordShingles doc)
-    spread(df).select(col(idCol).as("_id"),
-      explode(graft.functions.WordShingles.of(col(textCol), k)).as("w"))
-  }
-
-  /** DuckDB mirror of [[shingleSet]] as a FROM-able subselect body. */
   private[ops] def shingleSetSql(table: String, idCol: String, textCol: String,
                             k: Int): String =
     if (k <= 1)
@@ -155,8 +143,7 @@ object Dedup {
     * boilerplate/empty-page bucket at corpus scale is a quadratic bomb
     * AQE skew-splitting cannot bound (it splits the *input*, not the
     * join *output*). Buckets larger than `maxBucket` are dropped from
-    * pairing — the cap is part of the operator contract (use
-    * [[minHashLshDropped]] to audit what a given cap drops). Members of
+    * pairing — the cap is part of the operator contract. Members of
     * a dropped bucket still pair through their other (selective) bands,
     * and truly identical texts are the exact-dedup stage's job, not
     * LSH's.
@@ -186,17 +173,6 @@ object Dedup {
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .distinct()
   }
-
-  /** Audit companion of [[minHashLsh]]'s skew cap: the band buckets a
-    * given `maxBucket` excludes from pairing, with their member counts.
-    */
-  def minHashLshDropped(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 16, bands: Int = 4,
-                        shingleK: Int = 3, maxBucket: Int = 1000): DataFrame =
-    lshBands(minHashSignatures(df, idCol, textCol, numHashes, shingleK),
-             numHashes, bands)
-      .groupBy("band", "band_hash").agg(count(lit(1)).as("members"))
-      .filter(col("members") > maxBucket)
 
   def minHashLshOracleSql(fromCte: String, table: String, idCol: String,
                           textCol: String, numHashes: Int = 16,

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Json
 import graft.table.{PartitionLineage, TierTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -96,8 +97,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
   locally {
     import java.nio.file.{Files => F, Paths}
     val cfgPath = Paths.get(s"$root/DEDUP_CONFIG")
-    val cfg = "{\"num_hashes\":" + numHashes + ",\"bands\":" + bands +
-      ",\"shingle_k\":" + shingleK + ",\"hash_buckets\":" + hashBuckets + "}"
+    val knobs = Seq("num_hashes" -> numHashes, "bands" -> bands,
+                    "shingle_k" -> shingleK, "hash_buckets" -> hashBuckets)
+    val cfg = Json.write(
+      knobs.foldLeft(Json.obj()) { case (o, (k, v)) => o.put(k, v) })
     if (!F.exists(cfgPath)) {
       // content-atomic claim: write the full content to a unique temp
       // file and hard-LINK it into place — createLink fails if a
@@ -116,9 +119,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
       finally F.deleteIfExists(tmp)
     }
-    val stored = F.readString(cfgPath).trim
-    require(stored == cfg,
-      s"dedup table at $root was created with $stored; " +
+    val stored = F.readString(cfgPath)
+    val parsed = Json.parse(stored, s"dedup config $cfgPath")
+    require(knobs.forall { case (k, v) => parsed.long(k) == v },
+      s"dedup table at $root was created with ${stored.trim}; " +
         s"reopening with $cfg would silently lose pairs")
   }
 

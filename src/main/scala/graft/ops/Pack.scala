@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   *  - [[pack]] — one global window (`orderBy` without `partitionBy`):
   *    correct, but a single task sorts the whole corpus — fine for
   *    spot runs, wrong at scale.
-  *  - [[packBucketed]] — the scale form, same two-phase split as
-  *    [[Sessionize.assignBucketed]]: a LOCAL cumulative sum per id
+  *  - [[packBucketed]] — the scale form, the same two-phase split as
+  *    [[Sessionize.statsBucketed]]: a LOCAL cumulative sum per id
   *    bucket (heavy window partitioned by bucket), then per-bucket
   *    token totals (one tiny row per bucket) carried by a second
   *    window whose stream is |buckets|, and the bucket base offset

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * The id column is the deterministic tie-break (events at the same
   * instant sort stably and always share a session — their gap is 0).
   *
-  * Scale shape: identical to every other per-key window here — the
-  * exchange partitions by key; for Zipf-head keys apply the same
-  * (key, coarse bucket) two-phase split as [[AsofJoin.backwardBucketed]]
-  * if a single key's stream outgrows a task.
+  * Scale shape: [[assign]]/[[stats]] partition the one window by key,
+  * so a Zipf-head key's whole stream lands in one task; they stay as
+  * the simple reference form. Production runs [[statsBucketed]], the
+  * (key, time bucket) two-phase split, spec-pinned equal to [[stats]].
   */
 object Sessionize {
 
@@ -41,65 +41,10 @@ object Sessionize {
       .drop("_new")
   }
 
-  /** Skew-safe two-phase form of [[assign]] — identical `session_seq`
-    * numbering, but the raw-row window partitions by (key, time
-    * bucket), so a Zipf-head key costs one bucket per task, never its
-    * whole stream. Phase 2 runs on the per-bucket SUMMARY stream (one
-    * row per (key, bucket): first/last event time + local session
-    * count): a boundary whose inter-bucket gap is ≤ `gapSeconds`
-    * merges the adjacent sessions, and the global number of a row is
-    * its local number plus (sessions in earlier buckets − merged
-    * boundaries so far) — chains of merges across many narrow buckets
-    * collapse correctly because every merged boundary subtracts one.
-    */
-  def assignBucketed(df: DataFrame, keyCol: String, timeCol: String,
-                     idCol: String, gapSeconds: Long,
-                     bucketSeconds: Long): DataFrame =
-    assignBucketed(df, Seq(keyCol), timeCol, idCol, gapSeconds, bucketSeconds)
-
-  /** Skew-safe two-phase form over a multi-column session key. */
-  def assignBucketed(df: DataFrame, keyCols: Seq[String], timeCol: String,
-                     idCol: String, gapSeconds: Long,
-                     bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0, "bucket width must be positive")
-    val keys = keyCols.map(col)
-    val bucketed = df.withColumn("_bkt",
-      col(timeCol) - pmod(col(timeCol), lit(bucketSeconds)))
-    val w1 = Window.partitionBy(keys :+ col("_bkt"): _*)
-      .orderBy(col(timeCol), col(idCol))
-    val prev = lag(col(timeCol), 1).over(w1)
-    val local = bucketed
-      .withColumn("_new",
-        when(prev.isNull || col(timeCol) - prev > gapSeconds, 1L)
-          .otherwise(0L))
-      .withColumn("_ls", sum(col("_new")).over(
-        w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("_new")
-    // per-bucket summaries: the TINY phase-2 stream
-    val stats = local.groupBy(keys :+ col("_bkt"): _*)
-      .agg(min(col(timeCol)).as("_ft"), max(col(timeCol)).as("_lt"),
-           max(col("_ls")).as("_nl"))
-    val w2 = Window.partitionBy(keys: _*).orderBy("_bkt")
-    val prevLast = lag(col("_lt"), 1).over(w2)
-    val offsets = stats
-      .withColumn("_merge",
-        when(prevLast.isNotNull && col("_ft") - prevLast <= gapSeconds, 1L)
-          .otherwise(0L))
-      .withColumn("_off",
-        coalesce(sum(col("_nl")).over(
-          w2.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          - sum(col("_merge")).over(
-            w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(keys :+ col("_bkt") :+ col("_off"): _*)
-    local.join(offsets, keyCols :+ "_bkt")
-      .withColumn("session_seq", col("_ls") + col("_off"))
-      .drop("_bkt", "_ls", "_off")
-  }
-
-  /** Per-session stats straight from the bucketed two-phase plan —
-    * identical rows to `assignBucketed(…).groupBy(keys, session_seq)`
-    * with the raw-event stats aggregates, but the raw rows never leave
-    * the phase-1 window's partitioning: per-LOCAL-session stats
+  /** Skew-safe per-session stats — identical rows to [[stats]], but the
+    * raw-row window partitions by (key, time bucket), so a Zipf-head key
+    * costs one bucket per task, never its whole stream, and the raw rows
+    * never leave that phase-1 partitioning: per-LOCAL-session stats
     * aggregate under the same (key, bucket) partitioning (no exchange),
     * and only the session-level stream (one row per local session)
     * crosses the second (and last) exchange.
@@ -121,20 +66,15 @@ object Sessionize {
     * Plan shape (spec-pinned): TWO exchanges total — raw rows cross
     * only the phase-1 (key, bucket) exchange; session-level rows cross
     * the per-key carry exchange; no join, no exchange keyed on the
-    * local or global session. (A previous form derived per-bucket
-    * offsets in a separate branch and joined them back: the branch
-    * re-evaluated the phase-1 sort+window+aggregate a second time —
-    * only the shuffle was reused — and the join output needed a third
-    * exchange for the final grouping.)
+    * local or global session.
     *
     * Skew: the raw-row window stays bounded by (key, bucket) — a
     * Zipf-head key still costs one bucket per task in phase 1. The
     * carry window is O(local sessions) per key, aggregated before the
     * shuffle (guide §2.3); in the adversarial corner where nearly
     * every event is its own session AND one key owns the stream, that
-    * approaches the raw count again — there, [[assignBucketed]]'s
-    * bucket-summary offset join (O(buckets) per key carry) remains the
-    * fallback shape. Equality with the assign form is spec-pinned.
+    * approaches the raw count again. Equality with [[stats]] is
+    * spec-pinned.
     */
   def statsBucketed(df: DataFrame, keyCols: Seq[String], timeCol: String,
                     idCol: String, gapSeconds: Long,

@@ -136,29 +136,17 @@ object Similarity {
        |SELECT id_a, id_b, cos_micros FROM pairs
        |WHERE cos_micros >= $thresholdMicros""".stripMargin
 
-  /** Random-hyperplane LSH bucket id for one hash table: `planes` sign
-    * bits; plane p of table t has ±1 coefficient per dimension d from
-    * the parity of md5("t:p:d"). Deterministic, engine-portable: the
-    * projection is the same sequential zip-fold as [[dot]], so the
-    * DuckDB oracle ([[lshBucketSql]]) reproduces the floating-point sum
-    * — and hence every sign bit — exactly.
-    */
-  def lshBucket(vec: Column, table: Int, planes: Int, dims: Int): Column = {
-    val signBits = (0 until planes).map { p =>
-      val signs = array(planeSigns(table, p, dims).map(lit): _*)
-      val proj = dot(vec, signs)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    signBits.reduce(_ + _)
-  }
-
   /** ±1.0 coefficients of plane (table, p) over `dims` dimensions. */
   def planeSigns(table: Int, p: Int, dims: Int): Seq[Double] =
     (0 until dims).map(d => if (planeSign(table, p, d)) 1.0 else -1.0)
 
-  /** DuckDB mirror of [[lshBucket]] over a list-typed column expression
-    * `v` — plane coefficients baked as literal lists (they are
-    * deterministic constants of (table, plane, dim)).
+  /** Random-hyperplane LSH bucket id for one hash table, as DuckDB SQL
+    * over a list-typed column expression `v`: `planes` sign bits; plane
+    * p of table t has ±1 coefficient per dimension d from the parity of
+    * md5("t:p:d"), baked as literal lists. The projection is the same
+    * sequential zip-fold as [[graft.functions.LshBuckets]], so the
+    * oracle reproduces the floating-point sum — and hence every sign
+    * bit — exactly.
     */
   def lshBucketSql(v: String, table: Int, planes: Int, dims: Int): String =
     (0 until planes).map { p =>

@@ -64,8 +64,10 @@ object TierMain {
     println(manifest.toJson)
     if (retention.nonEmpty) {
       val dropped = runner.applyRetention(retention)
-      println(dropped.map { case (t, ks) =>
-        s""""$t":${ks.size}""" }.mkString("{\"retention_dropped\":{", ",", "}}"))
+      val o = graft.core.Json.obj()
+      val counts = o.putObject("retention_dropped")
+      dropped.foreach { case (t, ks) => counts.put(t, ks.size) }
+      println(graft.core.Json.write(o))
     }
     if (!preExisting) spark.stop()
   }

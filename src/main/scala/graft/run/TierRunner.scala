@@ -2,7 +2,7 @@ package graft.run
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.core.TierSpec
+import graft.core.{Json, TierSpec}
 import graft.ops.Rollup
 import graft.table.{PartitionLineage, TierTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -427,44 +427,52 @@ final case class RunEntry(tier: String, partition: String, rows: Long,
 /** Checkpoint manifest of one tier run: per (tier, partition) lineage
   * + metrics, plus the curation-ruleset version the run executed under
   * (the auditable config surface — [[graft.core.CurationRuleset]]).
-  * JSON format is hand-rolled (no external deps) and parsed back only
-  * for resume status.
+  * Parsed back only for resume status.
   */
 final case class RunManifest(runId: String, inputSnapshot: Long,
                              entries: Seq[RunEntry],
                              rulesetVersion: String =
                                graft.core.CurationRuleset.Default.version) {
   def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val parts = entries.map { e =>
-      s"""{"tier":${q(e.tier)},"partition":${q(e.partition)},"rows":${e.rows},""" +
-        s""""status":${q(e.status)},"elapsed_ms":${e.elapsedMs}}"""
-    }.mkString("[", ",", "]")
-    s"""{"run_id":${q(runId)},"input_snapshot":$inputSnapshot,""" +
-      s""""ruleset":${q(rulesetVersion)},"partitions":$parts}"""
+    val o = Json.obj().put("format", RunManifest.FormatVersion)
+      .put("run_id", runId).put("input_snapshot", inputSnapshot)
+      .put("ruleset", rulesetVersion)
+    val parts = o.putArray("partitions")
+    entries.foreach { e =>
+      parts.addObject().put("tier", e.tier).put("partition", e.partition)
+        .put("rows", e.rows).put("status", e.status)
+        .put("elapsed_ms", e.elapsedMs)
+    }
+    Json.write(o)
   }
   def okCount: Int = entries.count(_.status == "ok")
 }
 
 object RunManifest {
+  /** Checkpoint format version. A checkpoint without the field was
+    * written before versioning, in format 1's layout, and still
+    * resumes; any other version fails naming it.
+    */
+  val FormatVersion: Long = 1L
+
   /** Status of a failed stage: `error:<SimpleName>: <root-cause
-    * message>`, the message cut to its first non-blank line with
-    * control characters blanked, so the entry stays one JSON line.
+    * message>`, the message cut to its first non-blank line.
     */
   def errorStatus(e: Throwable): String = {
     val root = org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)
     val msg = Option(root.getMessage).toSeq
       .flatMap(_.linesIterator.map(_.trim)).find(_.nonEmpty).getOrElse("")
-    s"error:${e.getClass.getSimpleName}: ${msg.replaceAll("\\p{Cntrl}", " ")}"
+    s"error:${e.getClass.getSimpleName}: $msg"
   }
 
   /** partition-status map "tier/partition" -> status. */
   def parseStatuses(json: String): Map[String, String] = {
-    val str = "\"((?:[^\"\\\\]|\\\\.)*)\""
-    val re = ("\\{\"tier\":" + str + ",\"partition\":" + str + "," +
-      "\"rows\":(-?\\d+),\"status\":" + str + "(?:,\"elapsed_ms\":(-?\\d+))?\\}").r
-    def unescape(s: String) = s.replaceAll("\\\\(.)", "$1")
-    re.findAllMatchIn(json).map(m =>
-      s"${unescape(m.group(1))}/${unescape(m.group(2))}" -> unescape(m.group(4))).toMap
+    val m = Json.parse(json, "run checkpoint")
+    m.optLong("format").filter(_ != FormatVersion).foreach { v =>
+      throw new IllegalStateException(
+        s"run checkpoint format $v not in supported {$FormatVersion}")
+    }
+    m.elements("partitions").map(e =>
+      s"${e.str("tier")}/${e.str("partition")}" -> e.str("status")).toMap
   }
 }

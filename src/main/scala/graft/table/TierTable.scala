@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import graft.core.Json
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,10 +54,31 @@ final class TierTable(val root: String, spark: SparkSession) {
     else None
 
   def manifest(snapshot: Long): Manifest =
-    Manifest.fromJson(Files.readString(
-      manifests.resolve(s"manifest-$snapshot.json")))
+    Manifest.fromJson(Files.readString(manifestFile(snapshot)))
 
   def currentManifest: Option[Manifest] = currentSnapshotId.map(manifest)
+
+  private def manifestFile(id: Long) = manifests.resolve(s"manifest-$id.json")
+  private def reserveFile(id: Long) = manifests.resolve(s".reserve-$id")
+
+  /** Snapshot ids named in `manifests/`: published (`manifest-<id>.json`)
+    * and reserved (`.reserve-<id>`).
+    */
+  private def listedIds(): (Seq[Long], Seq[Long]) = {
+    import scala.jdk.CollectionConverters._
+    val names = scala.util.Using.resource(Files.list(manifests))(
+      _.iterator().asScala.map(_.getFileName.toString).toList)
+    (names.collect { case TierTable.ManifestName(id) => id.toLong },
+     names.collect { case TierTable.ReserveName(id) => id.toLong })
+  }
+
+  /** Atomically point CURRENT at `snapshot` (temp file + rename). */
+  private def writeCurrent(snapshot: Long): Unit = {
+    val ctmp = rootPath.resolve(".CURRENT.tmp")
+    Files.writeString(ctmp, snapshot.toString)
+    Files.move(ctmp, current, StandardCopyOption.ATOMIC_MOVE,
+               StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** Next snapshot id, atomically RESERVED before any data is written:
     * past EVERY existing manifest (after [[rollbackTo]], parent+1 would
@@ -72,25 +94,12 @@ final class TierTable(val root: String, spark: SparkSession) {
     * reservation once the manifest exists.
     */
   private def reserveSnapshotId(): Long = {
-    import scala.jdk.CollectionConverters._
-    import scala.util.Using
     while (true) {
-      val ids = Using.resource(Files.list(manifests)) { stream =>
-        stream.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect {
-            case s if s.startsWith("manifest-") =>
-              s.stripPrefix("manifest-").stripSuffix(".json").toLong
-            case s if s.startsWith(".reserve-") &&
-                      s.stripPrefix(".reserve-").forall(_.isDigit) &&
-                      s.length > ".reserve-".length =>
-              s.stripPrefix(".reserve-").toLong
-          }
-          .toSeq
-      }
+      val (published, reserved) = listedIds()
+      val ids = published ++ reserved
       val id = if (ids.isEmpty) 0L else ids.max + 1L
       try {
-        Files.createFile(manifests.resolve(s".reserve-$id"))
+        Files.createFile(reserveFile(id))
         return id
       } catch {
         case _: java.nio.file.FileAlreadyExistsException => () // raced — rescan
@@ -207,8 +216,8 @@ final class TierTable(val root: String, spark: SparkSession) {
     try body
     catch {
       case t: Throwable =>
-        if (!Files.exists(manifests.resolve(s"manifest-$snap.json")))
-          Files.deleteIfExists(manifests.resolve(s".reserve-$snap"))
+        if (!Files.exists(manifestFile(snap)))
+          Files.deleteIfExists(reserveFile(snap))
         throw t
     }
 
@@ -238,7 +247,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     // same next id must not silently overwrite each other's manifest —
     // the second one fails here, BEFORE clobbering, and retries with a
     // fresh id (same contract as the CURRENT CAS below)
-    val target = manifests.resolve(s"manifest-${m.snapshot}.json")
+    val target = manifestFile(m.snapshot)
     if (Files.exists(target))
       throw new java.util.ConcurrentModificationException(
         s"snapshot ${m.snapshot} already published at $root " +
@@ -248,7 +257,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
     // the manifest now protects the id; the reservation can go (even if
     // the CAS below fails, the id is never reused)
-    Files.deleteIfExists(manifests.resolve(s".reserve-${m.snapshot}"))
+    Files.deleteIfExists(reserveFile(m.snapshot))
     // the interleave hook stays OUTSIDE the lock (a hooked spec thread
     // may wait for a concurrent publish, which needs the lock)
     beforeCurrentMove()
@@ -258,10 +267,7 @@ final class TierTable(val root: String, spark: SparkSession) {
         throw new java.util.ConcurrentModificationException(
           s"concurrent commit at $root: this commit's parent is " +
             s"$expectedParent but CURRENT is now $now — retry from a fresh read")
-      val ctmp = rootPath.resolve(".CURRENT.tmp")
-      Files.writeString(ctmp, m.snapshot.toString)
-      Files.move(ctmp, current, StandardCopyOption.ATOMIC_MOVE,
-                 StandardCopyOption.REPLACE_EXISTING)
+      writeCurrent(m.snapshot)
     }
     m
   }
@@ -450,12 +456,9 @@ final class TierTable(val root: String, spark: SparkSession) {
     * later snapshots only ever ADD directories.
     */
   def rollbackTo(snapshot: Long): Unit = {
-    require(Files.exists(manifests.resolve(s"manifest-$snapshot.json")),
+    require(Files.exists(manifestFile(snapshot)),
       s"no manifest for snapshot $snapshot at $root")
-    val ctmp = rootPath.resolve(".CURRENT.tmp")
-    Files.writeString(ctmp, snapshot.toString)
-    Files.move(ctmp, current, StandardCopyOption.ATOMIC_MOVE,
-               StandardCopyOption.REPLACE_EXISTING)
+    writeCurrent(snapshot)
   }
 
   /** Expire history: keep the `keepLast` most recent snapshots (always
@@ -470,13 +473,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     require(keepLast >= 1, "must keep at least the current snapshot")
     import scala.jdk.CollectionConverters._
     import scala.util.Using
-    val ids = Using.resource(Files.list(manifests)) { stream =>
-      stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("manifest-") =>
-          s.stripPrefix("manifest-").stripSuffix(".json").toLong }
-        .toSeq.sorted
-    }
+    val ids = listedIds()._1.sorted
     // after a rollback the current snapshot may be OLD — it must
     // survive expiry regardless of recency
     val cur = currentSnapshotId
@@ -489,7 +486,7 @@ final class TierTable(val root: String, spark: SparkSession) {
           // path shape: data/snap=<k>/<col>=<v>
           p.path.split("/")(1).stripPrefix("snap=").toLong
       }).toSet
-    drop.foreach(id => Files.deleteIfExists(manifests.resolve(s"manifest-$id.json")))
+    drop.foreach(id => Files.deleteIfExists(manifestFile(id)))
     val deletable = drop.filterNot(referenced.contains)
     deletable.foreach { id =>
       val dir = rootPath.resolve(s"data/snap=$id")
@@ -507,17 +504,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     // writer's file is rescanned by all future reserveSnapshotId calls
     // forever.
     cur.foreach { c =>
-      Using.resource(Files.list(manifests)) { stream =>
-        stream.iterator().asScala
-          .filter { p =>
-            val s = p.getFileName.toString
-            s.startsWith(".reserve-") &&
-              s.stripPrefix(".reserve-").forall(_.isDigit) &&
-              s.length > ".reserve-".length &&
-              s.stripPrefix(".reserve-").toLong <= c
-          }
-          .toSeq.foreach(Files.deleteIfExists(_))
-      }
+      listedIds()._2.filter(_ <= c).foreach(id => Files.deleteIfExists(reserveFile(id)))
     }
     deletable
   }
@@ -527,8 +514,8 @@ final class TierTable(val root: String, spark: SparkSession) {
   * snapshot yet, or nothing in the snapshot (or the selected subset)
   * carries rows and there is no schema source. Deliberately distinct
   * from the plain IllegalStateExceptions that signal CORRUPTION
-  * (unversioned/unsupported manifest formats): callers that want to
-  * treat an empty table as an empty result (e.g.
+  * (unversioned/unsupported manifest formats, missing fields): callers
+  * that want to treat an empty table as an empty result (e.g.
   * [[graft.ops.IncrementalDedup.pairs]]) catch THIS type only, so a
   * corrupt manifest still fails loudly instead of reading as "no
   * duplicates".
@@ -567,22 +554,29 @@ final case class Manifest(snapshot: Long, parent: Option[Long],
 
   def totalRows: Long = partitions.values.map(_.rows).sum
 
+  /** Compact JSON: fixed key order, partitions sorted by key, optional
+    * keys (`bucket_col`, `lineage`, `error`, the id range) omitted when
+    * unset, `parent` written as null for a root snapshot.
+    */
   def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val parts = partitions.toSeq.sortBy(_._1).map { case (k, p) =>
-      val lin = p.lineage.map(l =>
-        s""","lineage":{"input_snapshot":${l.inputSnapshot},"status":${q(l.status)}""" +
-          l.error.map(e => s""","error":${q(e)}""").getOrElse("") +
-          l.idMin.zip(l.idMax).map { case (mn, mx) =>
-            s""","id_min":$mn,"id_max":$mx""" }.getOrElse("") + "}")
-        .getOrElse("")
-      s"""${q(k)}:{"path":${q(p.path)},"rows":${p.rows},"checksum":${p.checksum}$lin}"""
-    }.mkString("{", ",", "}")
-    s"""{"format":${Manifest.FormatVersion},"snapshot":$snapshot,""" +
-      s""""parent":${parent.map(_.toString).getOrElse("null")},""" +
-      s""""timestamp_ms":$timestampMs,"partition_col":${q(partitionCol)},""" +
-      bucketCol.map(b => s""""bucket_col":${q(b)},""").getOrElse("") +
-      s""""partitions":$parts}"""
+    val o = Json.obj().put("format", Manifest.FormatVersion)
+      .put("snapshot", snapshot)
+    parent.fold(o.putNull("parent"))(o.put("parent", _))
+    o.put("timestamp_ms", timestampMs).put("partition_col", partitionCol)
+    bucketCol.foreach(o.put("bucket_col", _))
+    val parts = o.putObject("partitions")
+    for ((k, p) <- partitions.toSeq.sortBy(_._1)) {
+      val e = parts.putObject(k).put("path", p.path).put("rows", p.rows)
+        .put("checksum", p.checksum)
+      p.lineage.foreach { l =>
+        val lo = e.putObject("lineage")
+          .put("input_snapshot", l.inputSnapshot).put("status", l.status)
+        l.error.foreach(lo.put("error", _))
+        l.idMin.zip(l.idMax).foreach { case (mn, mx) =>
+          lo.put("id_min", mn).put("id_max", mx) }
+      }
+    }
+    Json.write(o)
   }
 }
 
@@ -611,15 +605,12 @@ object Manifest {
   val FormatVersion: Long = 4L
   val ReadableVersions: Set[Long] = Set(2L, 3L, FormatVersion)
 
-  /** Minimal JSON reader for manifests this class wrote (no external
-    * JSON library; the format is fully under our control).
+  /** Reads fields by name in any order; a missing or mistyped field
+    * fails naming it, so no partition entry is ever silently dropped.
     */
   def fromJson(s: String): Manifest = {
-    import scala.util.matching.Regex
-    def longField(name: String): Long =
-      s"""\"$name\":(-?\\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-    val fmt = """"format":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    fmt match {
+    val m = Json.parse(s, "tier-table manifest")
+    m.optLong("format") match {
       case None => throw new IllegalStateException(
         "unversioned (pre-v2) tier-table manifest: this table was " +
           "written with the legacy data/s<k> layout and must be " +
@@ -630,31 +621,16 @@ object Manifest {
             ReadableVersions.toSeq.sorted.mkString("{", ",", "}"))
       case _ => ()
     }
-    val parent = """"parent":(null|\d+)""".r.findFirstMatchIn(s).get.group(1) match {
-      case "null" => None
-      case n      => Some(n.toLong)
-    }
-    val partitionCol =
-      """"partition_col":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s).get.group(1)
-    val bucketCol =
-      """"bucket_col":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(s).map(_.group(1))
-    val entryRe: Regex =
-      ("\"((?:[^\"\\\\]|\\\\.)*)\":\\{\"path\":\"((?:[^\"\\\\]|\\\\.)*)\"," +
-        "\"rows\":(-?\\d+),\"checksum\":(-?\\d+)" +
-        "(?:,\"lineage\":\\{\"input_snapshot\":(-?\\d+),\"status\":\"((?:[^\"\\\\]|\\\\.)*)\"" +
-        "(?:,\"error\":\"((?:[^\"\\\\]|\\\\.)*)\")?" +
-        "(?:,\"id_min\":(-?\\d+),\"id_max\":(-?\\d+))?\\})?\\}").r
-    val body = s.substring(s.indexOf("\"partitions\":") + "\"partitions\":".length)
-    val parts = entryRe.findAllMatchIn(body).map { m =>
-      val lineage = Option(m.group(5)).map(is =>
-        PartitionLineage(is.toLong, m.group(6), Option(m.group(7)),
-                         Option(m.group(8)).map(_.toLong),
-                         Option(m.group(9)).map(_.toLong)))
-      m.group(1) -> PartitionEntry(m.group(2), m.group(3).toLong,
-                                   m.group(4).toLong, lineage)
+    val parts = m.obj("partitions").members.map { case (k, p) =>
+      val lineage = p.optObj("lineage").map(l =>
+        PartitionLineage(l.long("input_snapshot"), l.str("status"),
+                         l.optStr("error"), l.optLong("id_min"),
+                         l.optLong("id_max")))
+      k -> PartitionEntry(p.str("path"), p.long("rows"), p.long("checksum"),
+                          lineage)
     }.toMap
-    Manifest(longField("snapshot"), parent, longField("timestamp_ms"),
-             partitionCol, parts, bucketCol)
+    Manifest(m.long("snapshot"), m.optLong("parent"), m.long("timestamp_ms"),
+             m.str("partition_col"), parts, m.optStr("bucket_col"))
   }
 }
 
@@ -672,4 +648,7 @@ object TierTable {
   private[table] def commitLockFor(root: java.nio.file.Path): Object =
     commitLocks.computeIfAbsent(
       root.toAbsolutePath.normalize.toString, _ => new Object)
+
+  private val ManifestName = """manifest-(\d+)\.json""".r
+  private val ReserveName = """\.reserve-(\d+)""".r
 }

@@ -330,6 +330,27 @@ class CurationSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("dedup config is compared field by field; a missing knob is named") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-incdedup-cfgjson").toString
+    new IncrementalDedup(spark, root, hashBuckets = 8)
+    val cfg = Paths.get(s"$root/DEDUP_CONFIG")
+    assert(Files.readString(cfg) ==
+      """{"num_hashes":16,"bands":4,"shingle_k":3,"hash_buckets":8}""")
+    // the same knobs in another key order and layout still match
+    Files.writeString(cfg,
+      "{ \"hash_buckets\": 8, \"shingle_k\": 3,\n  \"bands\": 4, \"num_hashes\": 16 }")
+    new IncrementalDedup(spark, root, hashBuckets = 8)
+    intercept[IllegalArgumentException] {
+      new IncrementalDedup(spark, root, hashBuckets = 16)
+    }
+    Files.writeString(cfg, """{"num_hashes":16,"bands":4,"hash_buckets":8}""")
+    val e = intercept[IllegalStateException] {
+      new IncrementalDedup(spark, root, hashBuckets = 8)
+    }
+    assert(e.getMessage.contains("\"shingle_k\""), e.getMessage)
+  }
+
   test("corrupt pair-table manifest fails pairs() loudly, never as 'no duplicates'") {
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("graft-incdedup-corrupt").toString

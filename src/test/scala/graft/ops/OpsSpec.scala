@@ -239,34 +239,6 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
            b.getAs[Long]("n_samples") == 4L)
   }
 
-  test("bucketed sessionization equals the one-window form at any bucket width") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    // bursts + long gaps + exact-gap boundaries + ties; sessions span
-    // many narrow buckets when width < gap (chained merges)
-    val rows = (0 until 400).map { i =>
-      val key = (i % 3).toLong
-      val t = rnd.nextInt(40000).toLong
-      (key, t, i.toLong)
-    } ++ Seq((9L, 0L, 1000L), (9L, 1800L, 1001L), (9L, 3600L, 1002L),
-             (9L, 5401L, 1003L)) // exact-gap chain then break
-    val ev = rows.toDF("user_id", "t_epoch", "event_id")
-    val base = Sessionize.assign(ev, "user_id", "t_epoch", "event_id", 1800L)
-      .select("user_id", "t_epoch", "event_id", "session_seq")
-    for (w <- Seq(450L, 1800L, 7200L, 1000000L)) {
-      val b = Sessionize.assignBucketed(
-          ev, "user_id", "t_epoch", "event_id", 1800L, w)
-        .select("user_id", "t_epoch", "event_id", "session_seq")
-      assert(b.exceptAll(base).isEmpty && base.exceptAll(b).isEmpty,
-        s"bucketed(width=$w) != one-window")
-    }
-    // skew contract: the raw-row window partitions by (key, bucket)
-    val p = Sessionize.assignBucketed(ev, "user_id", "t_epoch", "event_id",
-        1800L, 450L).queryExecution.executedPlan.toString
-    assert("hashpartitioning\\(user_id[^)]*_bkt".r.findFirstIn(p).isDefined,
-      p.take(1200))
-  }
-
   test("statsBucketed equals assign + raw-row session stats at any bucket width") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -316,10 +288,12 @@ class OpsSpec extends AnyFunSuite with SparkSuite {
     }.toDF("k1", "k2", "t_epoch", "event_id")
     val keys = Seq("k1", "k2")
     val base = Sessionize.assign(ev, keys, "t_epoch", "event_id", 1800L)
-    val bucketed = Sessionize.assignBucketed(ev, keys, "t_epoch", "event_id",
-                                             1800L, 450L)
-    assert(bucketed.exceptAll(base).isEmpty && base.exceptAll(bucketed).isEmpty,
-      "composite-key bucketed sessionize != one-window form")
+    val baseStats = Sessionize.stats(ev, keys, "t_epoch", "event_id", 1800L)
+    val bucketed = Sessionize.statsBucketed(ev, keys, "t_epoch", "event_id",
+                                            1800L, 450L)
+    assert(bucketed.exceptAll(baseStats).isEmpty &&
+           baseStats.exceptAll(bucketed).isEmpty,
+      "composite-key bucketed session stats != one-window form")
     // BOTH key columns partition the window exchange
     val p = base.queryExecution.executedPlan.toString
     assert("hashpartitioning\\(k1[^)]*k2".r.findFirstIn(p).isDefined, p.take(900))

@@ -534,6 +534,32 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
       "error:RuntimeException: root \"cause\"")
   }
 
+  test("run checkpoint is versioned: format 1 is its first field") {
+    val m = RunManifest("r1", 0L, Seq(RunEntry("5m", "1", 2L, "ok", 3L)), "v1.0")
+    assert(m.toJson ==
+      """{"format":1,"run_id":"r1","input_snapshot":0,"ruleset":"v1.0",""" +
+      """"partitions":[{"tier":"5m","partition":"1","rows":2,"status":"ok","elapsed_ms":3}]}""")
+  }
+
+  test("an unversioned run checkpoint (written before versioning) still resumes") {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    val days = runner.ingest(WebPages.load(spark, sfDir))
+    val m1 = runner.run("r1", days)
+    val ckpt = java.nio.file.Paths.get(s"$root/checkpoints/run-r1.json")
+    val unversioned = m1.toJson.replaceFirst("^\\{\"format\":1,", "{")
+    assert(unversioned.startsWith("{\"run_id\":"))
+    java.nio.file.Files.writeString(ckpt, unversioned)
+    val m2 = runner.run("r1", days)
+    assert(m2.entries.nonEmpty && m2.entries.forall(e => e.status == "ok" && e.rows == -1L))
+  }
+
+  test("a run checkpoint of an unsupported format fails naming the version") {
+    val json = """{"format":7,"run_id":"r1","input_snapshot":0,"ruleset":"v1.0","partitions":[]}"""
+    val e = intercept[IllegalStateException](RunManifest.parseStatuses(json))
+    assert(e.getMessage.contains("format 7"), e.getMessage)
+  }
+
   test("rollback repoints CURRENT; post-rollback commits never collide; expiry keeps current") {
     import org.apache.spark.sql.functions._
     val root = tmpRoot()
