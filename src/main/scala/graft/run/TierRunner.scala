@@ -35,50 +35,75 @@ import org.apache.spark.sql.functions._
   */
 final class TierRunner(spark: SparkSession, root: String,
                        saltBuckets: Option[Int] = None) {
+  import TierRunner._
+  import TierSpec.{T1d, T1h, T30d, T5m}
 
-  private def tableFor(tier: TierSpec): TierTable =
-    new TierTable(s"$root/tier_${tier.name}", spark).init()
+  /** The value cascade's finest level: flagged measures (three-state
+    * missingness) plus `text_sha`, the byte-identical-text invariant
+    * XOR-folded up every tier. saltBuckets (skew mode for Zipf-head
+    * domains) makes it the two-phase salted aggregation — spec-pinned
+    * equal. */
+  private val valuePass = new RawPass(T5m,
+    Rollup.flagged :+ Rollup.textShaOf(xxhash64(graft.ingest.WebPages.extractText(col("html")))),
+    saltBuckets)
+
+  // Sketch ladders at 1h→1d→30d — an exact histogram (per-band sums),
+  // HLL distinct urls (register union), KLL quantiles (sketch merge):
+  // a distinct-count or distribution query over years of data reads a
+  // day-partitioned sketch tier, never raw. The three finest levels
+  // share one grouping key, so ONE raw pass feeds all three commits.
+  private val HistBands = 8
+  private val sketchPass = new RawPass(T1h,
+    Rollup.hist(HistBands) ++ Seq(Rollup.urlSketch, Rollup.valueSketch, Rollup.rowCount))
+  private val sketchStages = Seq(
+    Stage("hist_1h", "hist_1h", T1h, None, FromRaw(sketchPass, Rollup.hist(HistBands))),
+    Stage("hll_1h", "hll_1h", T1h, None, FromRaw(sketchPass, Seq(Rollup.urlSketch, Rollup.rowCount))),
+    Stage("kll_1h", "kll_1h", T1h, None, FromRaw(sketchPass, Seq(Rollup.valueSketch, Rollup.rowCount))),
+    Stage("hist_1d", "hist_1d", T1d, Some("hist_1h"), Merge),
+    Stage("hll_1d", "hll_1d", T1d, Some("hll_1h"), Merge),
+    Stage("kll_1d", "kll_1d", T1d, Some("kll_1h"), Merge),
+    Stage("hist_30d", "hist_30d", T30d, Some("hist_1d"), Merge),
+    Stage("hll_30d", "hll_30d", T30d, Some("hll_1d"), Merge),
+    Stage("kll_30d", "kll_30d", T30d, Some("kll_1d"), Merge))
+
+  /** Every stage of a run, in run order: the value cascade (5m from
+    * raw, each coarser tier by MERGE of the finer one), the Gorilla
+    * blocks over 5m, then the sketch ladders. Keys are the checkpoint's
+    * stage names (an old checkpoint resumes only by them); directories
+    * are the tables' names under `root`.
+    */
+  private val stages: Seq[Stage] = Seq(
+    Stage("5m", "tier_5m", T5m, None, FromRaw(valuePass, valuePass.measures)),
+    Stage("1h", "tier_1h", T1h, Some("5m"), Merge),
+    Stage("1d", "tier_1d", T1d, Some("1h"), Merge),
+    Stage("30d", "tier_30d", T30d, Some("1d"), Merge),
+    Stage("blocks", "blocks_5m", T5m, Some("5m"), Encode)) ++ sketchStages
+
+  /** The raw day table and every stage's table, by stage key. */
+  private val tables: Map[String, TierTable] =
+    (("raw" -> "tier_raw") +: stages.map(s => s.key -> s.dir)).map { case (key, dir) =>
+      key -> new TierTable(s"$root/$dir", spark).init()
+    }.toMap
+  private val rawTable = tables("raw")
+
+  private def table(key: String): TierTable = tables.getOrElse(key,
+    throw new IllegalArgumentException(s"no $key table in $root"))
+
+  /** Crash-injection point for specs: runs after each stage's
+    * checkpoint is written. */
+  private[run] var afterStage: String => Unit = _ => ()
 
   /** Start of the width-aligned bucket containing a day partition key —
-    * the ONE definition of coarse-bucket membership shared by the value
-    * cascade's 30d tier and the sketch ladders' 30d levels (a
-    * divergence here would silently desynchronize them).
-    */
+    * the ONE definition of coarse-bucket membership for every 30d level. */
   private def bucketStart(day: String, widthSeconds: Long): String =
     (day.toLong - (day.toLong % widthSeconds)).toString
 
-  /** Day partitions of `tbl` that are members of the given width-aligned
-    * buckets. */
-  private def memberDays(tbl: TierTable, buckets: Set[String],
-                         widthSeconds: Long): Set[String] =
-    tbl.partitionKeys.filter(d => buckets.contains(bucketStart(d, widthSeconds)))
-
-  private val rawTable = new TierTable(s"$root/tier_raw", spark).init()
-  private val blocksTable = new TierTable(s"$root/blocks_5m", spark).init()
-
-  // continuous-aggregate sketch tiers, maintained through the SAME
-  // watermark/lineage machinery as the rollup cascade (VERDICT r4 #3):
-  // an exact mergeable histogram ladder (per-band sums), an HLL
-  // distinct-url ladder (register union) and a KLL quantile ladder
-  // (sketch merge), each at 1h→1d→30d — a distinct-count or
-  // distribution query over years of data reads a day-partitioned
-  // sketch tier, never raw
-  private val HistBands = 8
-  /** The three ladders share one finest-level pass over these measures;
-    * each ladder's table keeps its own columns of it. */
-  private val sketchMeasures =
-    Rollup.hist(HistBands) ++ Seq(Rollup.urlSketch, Rollup.valueSketch, Rollup.rowCount)
-  private val sketchLadders: Seq[(String, Seq[String])] = Seq(
-    "hist" -> Rollup.hist(HistBands).map(_.name),
-    "hll" -> Seq(Rollup.urlSketch.name, Rollup.rowCount.name),
-    "kll" -> Seq(Rollup.valueSketch.name, Rollup.rowCount.name))
-  private val sketchTiers = Seq(TierSpec.T1h, TierSpec.T1d, TierSpec.T30d)
-  /** Stage key and table directory of a (ladder, tier), e.g. `hll_1d`. */
-  private def sketchKey(ladder: String, t: TierSpec): String = s"${ladder}_${t.name}"
-  private val sketchTables: Map[String, TierTable] =
-    (for ((ladder, _) <- sketchLadders; t <- sketchTiers)
-      yield sketchKey(ladder, t) ->
-        new TierTable(s"$root/${sketchKey(ladder, t)}", spark).init()).toMap
+  /** Partition key of a row at `tier`: the day of its bucket, or the
+    * bucket itself from 1d up (already day-aligned; a 30d bucket is its
+    * own partition). */
+  private def dayEpoch(tier: TierSpec): Column =
+    if (tier.seconds >= T1d.seconds) col("bucket_epoch")
+    else col("bucket_epoch") - (col("bucket_epoch") % T1d.seconds)
 
   /** Append a raw increment (new web pages) as a new raw snapshot,
     * partitioned by day. Returns the set of touched day partitions.
@@ -119,9 +144,9 @@ final class TierRunner(spark: SparkSession, root: String,
   def rawRows: Long = rawTable.currentManifest.map(_.totalRows).getOrElse(0L)
 
   /** Run the cascade incrementally for the given touched day
-    * partitions; write a checkpoint manifest under `runId`. Resumable:
-    * partitions marked ok in an existing manifest for `runId` are
-    * skipped.
+    * partitions; write a checkpoint manifest under `runId` after every
+    * stage. Resumable: partitions marked ok in an existing manifest for
+    * `runId` are skipped.
     */
   def run(runId: String, touchedDays: Set[String],
           rulesetVersion: String =
@@ -139,7 +164,7 @@ final class TierRunner(spark: SparkSession, root: String,
     val inputSnapshot = rawTable.currentSnapshotId.getOrElse(
       throw new IllegalStateException("no raw snapshot ingested"))
 
-    val entries = Vector.newBuilder[RunEntry]
+    val entries = scala.collection.mutable.ArrayBuffer[RunEntry]()
 
     // Dependency-aware failure isolation: if a stage's commit (or its
     // snapshot read) fails, every stage downstream of it is recorded as
@@ -149,144 +174,106 @@ final class TierRunner(spark: SparkSession, root: String,
     // which tables reflect the current input.
     val failed = scala.collection.mutable.Set[String]()
 
-    // The one stage harness for every table a run maintains: resume-
-    // skip, dependency-aware failure isolation, one copy-on-write
-    // commit, per-partition lineage + metrics.
-    def runStage(key: String, upstream: Option[String],
-                 table: TierTable,
-                 partitions: Set[String] = touchedDays)
-                (compute: Set[String] => DataFrame): Unit = {
-      val already = partitions.filter(p =>
-        previous.get(s"$key/$p").contains("ok"))
-      val todo = partitions -- already
-      // resumed partitions must be re-recorded: the checkpoint is
-      // rewritten whole, and dropping them would make the NEXT resume
-      // rebuild every partition of this stage
-      already.foreach(p => entries += RunEntry(key, p, -1L, "ok", 0L))
-      val t0 = System.nanoTime()
-      def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-      if (todo.isEmpty) return
-      if (upstream.exists(failed.contains)) {
-        failed += key
-        todo.foreach(p => entries += RunEntry(key, p, 0L, "skipped:upstream_failed", 0L))
-      } else try {
-        val lineage = todo.map(p =>
-          p -> PartitionLineage(inputSnapshot, "ok")).toMap
-        val m = table.commitOverwrite(compute(todo), "day_epoch", lineage)
-        val ms = elapsedMs
-        todo.foreach { p =>
-          entries += RunEntry(key, p,
-            m.partitions.get(p).map(_.rows).getOrElse(0L), "ok", ms)
-        }
-      } catch {
-        case e: Exception =>
-          failed += key
-          val status = RunManifest.errorStatus(e)
-          todo.foreach(p => entries += RunEntry(key, p, 0L, status, elapsedMs))
-      }
-    }
-
     // Day is the partition unit of every table below 30d; a 30d level
     // rebuilds whole 30d buckets from every member day of a touched
     // bucket still present in the finer table.
     def partitionsAt(tier: TierSpec): Set[String] =
-      if (tier.seconds <= TierSpec.T1d.seconds) touchedDays
+      if (tier.seconds <= T1d.seconds) touchedDays
       else touchedDays.map(bucketStart(_, tier.seconds))
     def finerRows(finer: TierTable, tier: TierSpec, todo: Set[String]): DataFrame =
       finer.read(
-        if (tier.seconds <= TierSpec.T1d.seconds) todo
-        else memberDays(finer, todo, tier.seconds))
-    def dayOf(c: Column): Column = c - (c % TierSpec.T1d.seconds)
+        if (tier.seconds <= T1d.seconds) todo
+        else finer.partitionKeys.filter(d => todo(bucketStart(d, tier.seconds))))
 
-    // ---- value cascade: 5m from the touched raw days, each coarser
-    // tier by MERGE of the finer tier. Flagged measures: three-state
-    // missingness (OK/NODATA/UNDETECT counts, OK-only value aggregates)
-    // travels the whole production cascade. text_sha: the byte-
-    // identical-text invariant, hashed from the html payload per raw row
-    // and XOR-folded up every tier. saltBuckets (skew mode for Zipf-head
-    // domains) switches 5m to the two-phase salted aggregation —
-    // spec-pinned equal.
-    runStage(TierSpec.T5m.name, None, tableFor(TierSpec.T5m)) { todo =>
-      Rollup.fromRaw(rawTable.read(todo), TierSpec.T5m,
-          textSha = Some(xxhash64(graft.ingest.WebPages.extractText(col("html")))),
-          measures = Rollup.flagged, saltBuckets = saltBuckets)
-        .withColumn("day_epoch", dayOf(col("bucket_epoch")))
-    }
-    for ((finer, tier) <- TierSpec.cascade.zip(TierSpec.cascade.tail))
-      runStage(tier.name, Some(finer.name), tableFor(tier), partitionsAt(tier)) { todo =>
-        Rollup.cascade(finerRows(tableFor(finer), tier, todo), tier)
-          .withColumn("day_epoch",
-            if (tier.seconds <= TierSpec.T1d.seconds) dayOf(col("bucket_epoch"))
-            else col("bucket_epoch"))
-      }
+    // A raw pass read by several stages is aggregated once over every
+    // touched day — lazily, only if one of them has work — and
+    // persisted until its last reader is done; each reader keeps its
+    // own days and columns, and still fails/resumes on its own.
+    val readers = stages.collect { case s @ Stage(_, _, _, _, FromRaw(p, _)) => p -> s.key }
+    val shared = readers.groupBy(_._1).filter(_._2.size > 1).keySet
+    val persisted = scala.collection.mutable.Map[RawPass, DataFrame]()
+    def fromRaw(p: RawPass, days: Set[String]): DataFrame =
+      Rollup.fromRaw(rawTable.read(days), p.tier, measures = p.measures,
+          saltBuckets = p.saltBuckets)
+        .withColumn("day_epoch", dayEpoch(p.tier))
 
-    // ---- Gorilla value blocks: one compressed binary block per
-    // (series, day) over the 5m points (north-star binary column) ----
-    // THREE-STATE blocks: the value channel encodes every bucket
-    // (NaN where zero OK rows — the bit pattern Gorilla-XORs like
-    // any other double and decode maps back to null), and three
-    // parallel count channels carry the OK/NODATA/UNDETECT bucket
-    // states through the codec round-trip exactly as they travel
-    // the rollup cascade. All four channels share one ts grid per
-    // (series, day), so decode re-aligns them positionally.
-    runStage("blocks", Some(TierSpec.T5m.name), blocksTable) { todo =>
-      val t5m = tableFor(TierSpec.T5m).read(todo)
-      def enc(v: Column) =
-        graft.codec.GorillaAgg.gorillaEncode(col("bucket_epoch"), v)
-      t5m.groupBy(col("domain"), col("day_epoch"))
-        .agg(
-          enc(coalesce(col("sum_value_micros").cast("double"),
-                       lit(Double.NaN))).as("block"),
-          enc(col("n_ok").cast("double")).as("ok_block"),
-          enc(col("n_nodata").cast("double")).as("nodata_block"),
-          enc(col("n_undetect").cast("double")).as("undetect_block"))
+    def rows(s: Stage, todo: Set[String]): DataFrame = s.build match {
+      case FromRaw(p, ms) if shared(p) =>
+        persisted.getOrElseUpdate(p, fromRaw(p, touchedDays).persist())
+          .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
+          .select(("domain" +: "bucket_epoch" +: ms.map(_.name) :+ "day_epoch").map(col): _*)
+      case FromRaw(p, _) => fromRaw(p, todo)
+      case Merge =>
+        Rollup.cascade(finerRows(table(s.upstream.get), s.tier, todo), s.tier)
+          .withColumn("day_epoch", dayEpoch(s.tier))
+      case Encode =>
+        // THREE-STATE blocks, one per (series, day) over the 5m points:
+        // the value channel (NaN where a bucket has zero OK rows; decode
+        // maps it back to null) plus OK/NODATA/UNDETECT count channels,
+        // all on one ts grid, so decode re-aligns them positionally.
+        def enc(v: Column) =
+          graft.codec.GorillaAgg.gorillaEncode(col("bucket_epoch"), v)
+        table(s.upstream.get).read(todo)
+          .groupBy(col("domain"), col("day_epoch"))
+          .agg(
+            enc(coalesce(col("sum_value_micros").cast("double"),
+                         lit(Double.NaN))).as("block"),
+            enc(col("n_ok").cast("double")).as("ok_block"),
+            enc(col("n_nodata").cast("double")).as("nodata_block"),
+            enc(col("n_undetect").cast("double")).as("undetect_block"))
     }
 
-    // ---- Sketch ladders: finest level from the touched raw days, the
-    // coarser levels by MERGE of the finer tier (per-band sums / HLL
-    // register union / KLL merge) — never a raw re-scan, so I1/I2
-    // watermark recompute and late-data partition rebuilds work exactly
-    // as for the value cascade.
-    // The three finest-level ladders share one grouping key, so ONE
-    // raw pass (one scan + one shuffle, built lazily and only if some
-    // 1h stage actually has work) feeds all three commits; each stage
-    // still fails/resumes independently. Run-scoped persist,
-    // unpersisted below.
-    var sketch1h: Option[DataFrame] = None
-    def sketch1hFrame: DataFrame = sketch1h.getOrElse {
-      val f = Rollup.fromRaw(rawTable.read(touchedDays), TierSpec.T1h,
-          measures = sketchMeasures)
-        .withColumn("day_epoch", dayOf(col("bucket_epoch")))
-        .persist()
-      sketch1h = Some(f)
-      f
-    }
-    try {
-      for ((ladder, cols) <- sketchLadders) {
-        val key = sketchKey(ladder, TierSpec.T1h)
-        runStage(key, None, sketchTables(key)) { todo =>
-          sketch1hFrame
-            .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
-            .select(("domain" +: "bucket_epoch" +: cols :+ "day_epoch").map(col): _*)
+    // ok partitions of the previous checkpoint by stage: a checkpoint
+    // keeps those of the stages not yet rerun, so a crash mid-rerun
+    // never forgets what an earlier attempt committed
+    val previousOk = previous.toSeq.collect { case (k, "ok") => k.splitAt(k.lastIndexOf('/')) }
+      .groupMap(_._1)(_._2.tail)
+
+    // The one stage harness for every table a run maintains: resume-
+    // skip, dependency-aware failure isolation, one copy-on-write
+    // commit, per-partition lineage + metrics, then the checkpoint.
+    def runStage(s: Stage, later: Seq[Stage]): Unit = {
+      val partitions = partitionsAt(s.tier)
+      val already = partitions.filter(p => previous.get(s"${s.key}/$p").contains("ok"))
+      val todo = partitions -- already
+      val t0 = System.nanoTime()
+      def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
+      val done: Seq[RunEntry] =
+        if (todo.isEmpty) Nil
+        else if (s.upstream.exists(failed.contains)) {
+          failed += s.key
+          todo.toSeq.map(RunEntry(s.key, _, 0L, "skipped:upstream_failed", 0L))
+        } else try {
+          val lineage = todo.map(p => p -> PartitionLineage(inputSnapshot, "ok")).toMap
+          val m = table(s.key).commitOverwrite(rows(s, todo), "day_epoch", lineage)
+          val ms = elapsedMs
+          todo.toSeq.map(p =>
+            RunEntry(s.key, p, m.partitions.get(p).map(_.rows).getOrElse(0L), "ok", ms))
+        } catch {
+          case e: Exception =>
+            failed += s.key
+            val status = RunManifest.errorStatus(e)
+            todo.toSeq.map(RunEntry(s.key, _, 0L, status, elapsedMs))
         }
-      }
-    } finally sketch1h.foreach(_.unpersist())
-    for ((finer, tier) <- sketchTiers.zip(sketchTiers.tail);
-         (ladder, _) <- sketchLadders) {
-      val (key, finerKey) = (sketchKey(ladder, tier), sketchKey(ladder, finer))
-      runStage(key, Some(finerKey), sketchTables(key), partitionsAt(tier)) { todo =>
-        Rollup.cascade(finerRows(sketchTables(finerKey), tier, todo), tier)
-          .withColumn("day_epoch", col("bucket_epoch"))
-      }
+      // resumed partitions are re-recorded, or the NEXT resume would
+      // rebuild them
+      entries ++= (already.toSeq.map(RunEntry(s.key, _, -1L, "ok", 0L)) ++ done)
+        .sortBy(_.partition.toLong)
+      readers.toMap.collect { case (p, last) if last == s.key => p }
+        .foreach(persisted.remove(_).foreach(_.unpersist()))
+      val carried = for (l <- later; p <- previousOk.getOrElse(l.key, Nil).sortBy(_.toLong))
+        yield RunEntry(l.key, p, -1L, "ok", 0L)
+      val tmp = ckptPath.resolveSibling(s".run-$runId.json.tmp")
+      Files.writeString(tmp,
+        RunManifest(runId, inputSnapshot, entries.toSeq ++ carried, rulesetVersion).toJson)
+      Files.move(tmp, ckptPath, StandardCopyOption.ATOMIC_MOVE,
+                 StandardCopyOption.REPLACE_EXISTING)
+      afterStage(s.key)
     }
 
-    val manifest = RunManifest(runId, inputSnapshot, entries.result(),
-                               rulesetVersion)
-    val tmp = ckptPath.resolveSibling(s".run-$runId.json.tmp")
-    Files.writeString(tmp, manifest.toJson)
-    Files.move(tmp, ckptPath, StandardCopyOption.ATOMIC_MOVE,
-               StandardCopyOption.REPLACE_EXISTING)
-    manifest
+    try for (s +: later <- stages.tails) runStage(s, later)
+    finally persisted.values.foreach(_.unpersist())
+    RunManifest(runId, inputSnapshot, entries.toSeq, rulesetVersion)
   }
 
   /** Full-rebuild mode — the reference's `--modified-days-ago 0`
@@ -309,27 +296,16 @@ final class TierRunner(spark: SparkSession, root: String,
                      keepRawDays: Option[Int] = None,
                      keepSketchDays: Option[Int] = None,
                      keepSketch30dDays: Option[Int] = None): Map[String, Set[String]] = {
-    val tiers = keepDays.map { case (t, days) =>
-      t.name -> dropOld(tableFor(t), days, keepSnapshots)
-    }
-    // the Gorilla block table, the raw day table, and the sketch
-    // ladders age out on their own horizons (blocks usually share the
-    // 5m tier's; raw is the replay/backfill buffer) — all
-    // day-partitioned, same manifest-only mechanism
-    def sketches(days: Option[Int], tiers: Seq[TierSpec]) =
-      for (d <- days.toSeq; (ladder, _) <- sketchLadders; t <- tiers)
-        yield sketchKey(ladder, t) ->
-          dropOld(sketchTables(sketchKey(ladder, t)), d, keepSnapshots)
-    val extra =
-      keepBlockDays.map(d => "blocks" -> dropOld(blocksTable, d, keepSnapshots)) ++
-      keepRawDays.map(d => "raw" -> dropOld(rawTable, d, keepSnapshots)) ++
-      sketches(keepSketchDays, sketchTiers.init) ++
-      // the COARSEST sketch level outlives the finer ones (the whole
-      // point of the ladder) — it ages out only under its own knob,
-      // never under the day-scale keepSketchDays, which would drop
-      // every 30d bucket but the newest
-      sketches(keepSketch30dDays, Seq(TierSpec.T30d))
-    tiers ++ extra
+    // blocks, raw and the sketch ladders age out on their own horizons
+    // (blocks usually share 5m's; raw is the replay/backfill buffer).
+    // The COARSEST sketch level ages out only under its own knob: the
+    // day-scale keepSketchDays would drop every 30d bucket but the newest.
+    val horizons = keepDays.toSeq.map { case (t, days) => t.name -> Option(days) } ++
+      Seq("blocks" -> keepBlockDays, "raw" -> keepRawDays) ++
+      sketchStages.map(s => s.key -> (if (s.tier == T30d) keepSketch30dDays else keepSketchDays))
+    horizons.collect { case (key, Some(days)) =>
+      key -> dropOld(table(key), days, keepSnapshots)
+    }.toMap
   }
 
   private def dropOld(tbl: TierTable, days: Int,
@@ -370,23 +346,19 @@ final class TierRunner(spark: SparkSession, root: String,
   }
 
   /** Read a tier's current snapshot. */
-  def tier(t: TierSpec): DataFrame = tableFor(t).read()
+  def tier(t: TierSpec): DataFrame = table(t.name).read()
 
   /** Read the exact histogram sketch tier (1h/1d/30d bands ladder). */
-  def histTier(t: TierSpec): DataFrame = sketchTier("hist", t)
+  def histTier(t: TierSpec): DataFrame = table(s"hist_${t.name}").read()
 
   /** Read the HLL distinct-url sketch tier (1h/1d/30d ladder). */
-  def hllTier(t: TierSpec): DataFrame = sketchTier("hll", t)
+  def hllTier(t: TierSpec): DataFrame = table(s"hll_${t.name}").read()
 
   /** Read the KLL quantile sketch tier (1h/1d/30d ladder). */
-  def kllTier(t: TierSpec): DataFrame = sketchTier("kll", t)
-
-  private def sketchTier(ladder: String, t: TierSpec): DataFrame =
-    sketchTables.getOrElse(sketchKey(ladder, t),
-      throw new IllegalArgumentException(s"no $ladder tier at ${t.name}")).read()
+  def kllTier(t: TierSpec): DataFrame = table(s"kll_${t.name}").read()
 
   /** Read the per-(series, day) Gorilla value blocks. */
-  def blocks(): DataFrame = blocksTable.read()
+  def blocks(): DataFrame = table("blocks").read()
 
   /** Decode the block table back to (domain, bucket_epoch, value,
     * n_ok, n_nodata, n_undetect) points — the generator inverse of the
@@ -417,9 +389,33 @@ final class TierRunner(spark: SparkSession, root: String,
   }
 }
 
-/** One (tier, partition) record of a run: lineage status + metrics
-  * (row count; wall-clock of the tier commit that produced it —
-  * resumed/skipped partitions carry 0).
+private object TierRunner {
+
+  /** One aggregation of the touched raw rows at `tier` into `measures`
+    * (reference identity: stages naming the same pass share it). */
+  final class RawPass(val tier: TierSpec, val measures: Seq[Rollup.Measure],
+                      val saltBuckets: Option[Int] = None)
+
+  /** How a stage builds the rows of the partitions it recomputes. */
+  sealed trait Build
+  /** Finest level: the `measures` columns of a raw pass. */
+  final case class FromRaw(pass: RawPass, measures: Seq[Rollup.Measure]) extends Build
+  /** `Rollup.cascade` merge of the upstream table's rows. */
+  case object Merge extends Build
+  /** Gorilla block encode of the upstream 5m table. */
+  case object Encode extends Build
+
+  /** One table a run maintains: its checkpoint key, its directory under
+    * the runner's root, its tier, the stage it is built from (None: the
+    * raw table) and how its rows are built. */
+  final case class Stage(key: String, dir: String, tier: TierSpec,
+                         upstream: Option[String], build: Build)
+}
+
+/** One (stage, partition) record of a run: lineage status + metrics
+  * (row count; wall-clock of the stage commit that produced it).
+  * A resumed partition (ok in the run's earlier checkpoint) carries
+  * rows −1 and elapsed 0; a skipped one rows 0 and elapsed 0.
   */
 final case class RunEntry(tier: String, partition: String, rows: Long,
                           status: String, elapsedMs: Long)

@@ -601,4 +601,82 @@ class TierRunnerSpec extends AnyFunSuite with SparkSuite {
     }
     assert(e2.getMessage.contains("99"))
   }
+
+  /** The run's stages in order: checkpoint keys old checkpoints resume by. */
+  private val StageKeys = Seq("5m", "1h", "1d", "30d", "blocks",
+    "hist_1h", "hll_1h", "kll_1h", "hist_1d", "hll_1d", "kll_1d",
+    "hist_30d", "hll_30d", "kll_30d")
+
+  /** One clean sf0.001 ingest+run, shared by the checks that only read it. */
+  private lazy val cleanRun: (String, RunManifest) = {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    (root, runner.run("r1", runner.ingest(WebPages.load(spark, sfDir))))
+  }
+
+  private def checkpointOrder(root: String, runId: String): Seq[(String, String)] =
+    graft.core.Json.parse(
+        Files.readString(java.nio.file.Paths.get(s"$root/checkpoints/run-$runId.json")), "ckpt")
+      .elements("partitions").map(e => (e.str("tier"), e.str("partition")))
+
+  test("stage contract: 14 stage keys in run order, each committing its own table directory") {
+    val (root, m) = cleanRun
+    assert(m.entries.map(_.tier).distinct == StageKeys)
+    val dirs = Map("5m" -> "tier_5m", "1h" -> "tier_1h", "1d" -> "tier_1d",
+      "30d" -> "tier_30d", "blocks" -> "blocks_5m") ++
+      StageKeys.drop(5).map(k => k -> k)
+    assert(new java.io.File(root).list().toSet == dirs.values.toSet ++ Set("tier_raw", "checkpoints"))
+    for ((key, dir) <- dirs) {
+      val parts = new graft.table.TierTable(s"$root/$dir", spark).currentManifest.get.partitions
+      val ents = m.entries.filter(_.tier == key)
+      assert(ents.nonEmpty && parts.keySet == ents.map(_.partition).toSet, key)
+      assert(ents.forall(e => e.status == "ok" && parts(e.partition).rows == e.rows), key)
+    }
+  }
+
+  test("checkpoint entries are ordered by stage, then by partition in numeric order") {
+    val (root, m) = cleanRun
+    assert(m.entries.count(_.tier == "5m") >= 5)
+    val key = (e: RunEntry) => (StageKeys.indexOf(e.tier), e.partition.toLong)
+    assert(m.entries.map(key) == m.entries.map(key).sorted)
+    assert(checkpointOrder(root, "r1") == m.entries.map(e => (e.tier, e.partition)))
+    // a resumed rerun lists the same entries in the same order
+    val again = new TierRunner(spark, root).run("r1", m.entries.filter(_.tier == "5m")
+      .map(_.partition).toSet)
+    assert(again.entries.map(e => (e.tier, e.partition)) == m.entries.map(e => (e.tier, e.partition)))
+    assert(again.entries.forall(_.rows == -1L))
+  }
+
+  test("a crash between stages resumes every stage committed before it") {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    val days = runner.ingest(WebPages.load(spark, sfDir))
+    runner.afterStage = key =>
+      if (key == "1d") throw new Error(s"simulated crash after $key")
+    intercept[Error](runner.run("r1", days))
+    assert(checkpointOrder(root, "r1").map(_._1).distinct == Seq("5m", "1h", "1d"))
+    runner.afterStage = _ => ()
+    val m = runner.run("r1", days)
+    assert(m.entries.map(_.tier).distinct == StageKeys)
+    for ((key, es) <- m.entries.groupBy(_.tier)) {
+      assert(es.forall(_.status == "ok"), key)
+      if (Set("5m", "1h", "1d")(key)) assert(es.forall(_.rows == -1L), s"$key not resumed")
+      else assert(es.forall(_.rows >= 0), s"$key not recomputed")
+    }
+  }
+
+  test("a crash mid-rerun keeps the earlier attempt's ok entries in the checkpoint") {
+    val root = tmpRoot()
+    val runner = new TierRunner(spark, root)
+    val days = runner.ingest(WebPages.load(spark, sfDir))
+    val m1 = runner.run("r1", days)
+    runner.afterStage = key =>
+      if (key == "5m") throw new Error(s"simulated crash after $key")
+    intercept[Error](runner.run("r1", days))
+    assert(checkpointOrder(root, "r1") == m1.entries.map(e => (e.tier, e.partition)))
+    runner.afterStage = _ => ()
+    val m2 = runner.run("r1", days)
+    assert(m2.entries.size == m1.entries.size)
+    assert(m2.entries.forall(e => e.status == "ok" && e.rows == -1L))
+  }
 }
