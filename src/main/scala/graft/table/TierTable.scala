@@ -462,12 +462,15 @@ final class TierTable(val root: String, spark: SparkSession) {
   }
 
   /** Expire history: keep the `keepLast` most recent snapshots (always
-    * at least the current one), delete older manifests, and remove any
-    * `data/snap=<k>` directory no kept manifest references — the
+    * at least the current one), delete older manifests, and remove every
+    * `data/snap=<k>` directory, and every `data/snap=<k>/<col>=<p>`
+    * partition directory, that no kept manifest references — the
     * Iceberg expire-snapshots maintenance analog. Copy-on-write means
-    * old snapshot dirs can still back current partitions; only truly
-    * unreferenced directories are deleted. Returns the deleted snapshot
-    * dirs' ids.
+    * old snapshot dirs can still back current partitions, so a
+    * retention commit that drops some of a snapshot dir's partitions
+    * frees exactly those. Only dirs of published ids are touched: an id
+    * that is merely reserved may still be being written. Returns the
+    * ids whose whole snapshot dir was deleted.
     */
   def expireSnapshots(keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current snapshot")
@@ -480,21 +483,25 @@ final class TierTable(val root: String, spark: SparkSession) {
     val (dropRaw, keepRaw) = ids.splitAt(math.max(ids.size - keepLast, 0))
     val drop = dropRaw.filterNot(cur.contains)
     val keep = keepRaw ++ dropRaw.filter(cur.contains)
-    val referenced: Set[Long] = keep.flatMap(id =>
-      manifest(id).partitions.values.collect {
-        case p if p.path.nonEmpty =>
-          // path shape: data/snap=<k>/<col>=<v>
-          p.path.split("/")(1).stripPrefix("snap=").toLong
-      }).toSet
+    // path shape: data/snap=<k>/<col>=<v>
+    val referenced: Set[String] = keep.flatMap(id =>
+      manifest(id).partitions.values.map(_.path).filter(_.nonEmpty)).toSet
+    val referencedSnaps = referenced.map(_.split("/")(1).stripPrefix("snap=").toLong)
     drop.foreach(id => Files.deleteIfExists(manifestFile(id)))
-    val deletable = drop.filterNot(referenced.contains)
-    deletable.foreach { id =>
-      val dir = rootPath.resolve(s"data/snap=$id")
-      if (Files.exists(dir)) {
-        Using.resource(Files.walk(dir)) { walk =>
-          walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        }
+    def deleteTree(dir: java.nio.file.Path): Unit =
+      if (Files.exists(dir)) Using.resource(Files.walk(dir)) { walk =>
+        walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       }
+    val deletable = drop.filterNot(referencedSnaps.contains)
+    deletable.foreach(id => deleteTree(rootPath.resolve(s"data/snap=$id")))
+    // a snapshot dir that still backs kept partitions loses the others
+    // (a referenced id was published, even if its manifest is expired)
+    referencedSnaps.foreach { id =>
+      val dir = rootPath.resolve(s"data/snap=$id")
+      Using.resource(Files.list(dir))(_.iterator().asScala.toList)
+        .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("=") &&
+          !referenced.contains(s"data/snap=$id/${p.getFileName}"))
+        .foreach(deleteTree)
     }
     // garbage-collect reservations from writers that crashed before
     // publishing: a `.reserve-<id>` with id at or below CURRENT can

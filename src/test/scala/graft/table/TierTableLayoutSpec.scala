@@ -181,4 +181,54 @@ class TierTableLayoutSpec extends AnyFunSuite with SparkSuite {
     val m = t.commitOverwrite(Seq((2L, 3L)).toDF("day_epoch", "v"), "day_epoch")
     assert(m.snapshot == 100L, s"id did not advance past the live reservation")
   }
+
+  /** Regular files under `data/snap=<k>/<col>=<p>/` (data files and their
+    * `.crc` siblings), as (partition dir relative to the root, file).
+    */
+  private def dataFiles(root: String): Seq[(String, java.nio.file.Path)] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    scala.util.Using.resource(java.nio.file.Files.walk(r.resolve("data")))(
+      _.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toList)
+      .map(f => r.relativize(f))
+      .filter(_.getNameCount >= 4)
+      .map(f => f.subpath(0, 3).toString -> f)
+  }
+
+  for (bucketed <- Seq(false, true))
+  test(s"expireSnapshots reclaims partition dirs no kept manifest references (bucketed=$bucketed)") {
+    import spark.implicits._
+    val root = tmpRoot("reclaim")
+    val t = new TierTable(root, spark).init()
+    val bucket = if (bucketed) Some("b") else None
+    def days(ds: Seq[Long], tag: Long) = {
+      val df = ds.flatMap(d => (0L until 6L).map(i => (d, i, tag))).toDF("day_epoch", "i", "v")
+      if (bucketed) df.withColumn("b", pmod(col("i"), lit(3L))) else df
+    }
+    // days 1..3 share data/snap=0; day 3 is then rewritten into snap=1
+    t.commitOverwrite(days(Seq(1L, 2L, 3L), 0L), "day_epoch", bucketCol = bucket)
+    t.commitOverwrite(days(Seq(3L), 1L), "day_epoch", bucketCol = bucket)
+    // a writer still in flight: reserved id, partial data, no manifest
+    val inFlight = java.nio.file.Paths.get(root, "data/snap=50/day_epoch=9")
+    java.nio.file.Files.createDirectories(inFlight)
+    java.nio.file.Files.writeString(inFlight.resolve("part-0.parquet"), "partial")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(root, "manifests/.reserve-50"))
+
+    assert(t.commitRetention(_ != "1") == Set("1"))
+    t.expireSnapshots(keepLast = 1)
+
+    val m = t.currentManifest.get
+    val live = m.partitions.values.map(_.path).filter(_.nonEmpty).toSet
+    assert(live == Set("data/snap=0/day_epoch=2", "data/snap=1/day_epoch=3"))
+    val (kept, stray) = dataFiles(root).partition { case (dir, _) => live(dir) }
+    assert(stray.map(_._1).distinct == Seq("data/snap=50/day_epoch=9"),
+      s"unreferenced data survived expiry (or the in-flight write was touched): $stray")
+    assert(kept.exists(_._2.toString.endsWith(".parquet")))
+    // the current snapshot still reads in full
+    val back = t.read()
+    assert(back.count() == m.totalRows && m.totalRows == 12L)
+    assert(back.select("day_epoch").distinct().as[Long].collect().toSet == Set(2L, 3L))
+    assert(back.filter(col("day_epoch") === 3L).select("v").distinct().as[Long]
+      .collect().toSeq == Seq(1L))
+  }
 }
