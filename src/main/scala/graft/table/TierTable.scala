@@ -1,9 +1,15 @@
 package graft.table
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 import graft.core.Json
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Iceberg-shaped snapshot/manifest table layer over Parquet
@@ -113,13 +119,18 @@ final class TierTable(val root: String, spark: SparkSession) {
     * be present in it. Unlisted partitions are carried forward from
     * the parent snapshot (copy-on-write).
     *
-    * Single-pass: the input is persisted, stats (rows + checksum per
-    * partition) are collected from the cache, and the write streams
-    * from the same cache — the commit never re-reads what it just
-    * wrote (at 100 TB a post-write stats scan would double write-path
-    * I/O). The cached set is bounded: commits carry only the touched
-    * partitions' recompute output (tier rows / day increments), never
-    * the whole table, and MEMORY_AND_DISK spills rather than OOMs.
+    * Single-pass: the parquet write is the commit's only Spark job.
+    * Its plan carries a `Dataset.observe` of [[TierTable.PartitionStats]]
+    * (rows + checksum per partition), so the stats are gathered from the
+    * rows as they stream into the writer and read back from an
+    * [[org.apache.spark.sql.Observation]] once the write returns — no
+    * cache, no second aggregate, and the commit never re-reads what it
+    * just wrote (at 100 TB a post-write stats scan would double
+    * write-path I/O). The observation sits in the write's result stage,
+    * above any exchange: Spark applies a result task's accumulator
+    * updates once per partition, even when a task or stage is retried.
+    * Stats that do not arrive within [[TierTable.ObservedWait]] fail the
+    * commit before anything is published.
     *
     * Empty-partition contract: a key in `lineage` (the requested
     * recompute set) that produced zero rows is recorded as an explicit
@@ -169,27 +180,25 @@ final class TierTable(val root: String, spark: SparkSession) {
     releaseOnFailure(snap) {
 
     val dataDir = rootPath.resolve(s"data/snap=$snap").toString
-    val cached = df.persist()
-    val stats =
-      try {
-        // order-insensitive content checksum: XOR-fold of per-row
-        // xxhash64 over name-sorted columns (sum would overflow long
-        // under ANSI arithmetic)
-        val hashCols = cached.columns.sorted.map(c => s"`$c`").mkString(",")
-        val s = cached.groupBy(col(partitionCol).cast("string").as("p"))
-          .agg(count(lit(1)).as("rows"),
-               expr(s"bit_xor(xxhash64($hashCols))").as("checksum"))
-          .collect()
-          .map(r => r.getString(0) ->
-            PartitionEntry(s"data/snap=$snap/$partitionCol=${r.getString(0)}",
-              r.getLong(1), r.getLong(2),
-              lineage.get(r.getString(0))))
-          .toMap
-        cached.write
-          .partitionBy(partitionCol +: effBucket.toSeq: _*)
-          .mode("overwrite").parquet(dataDir)
-        s
-      } finally cached.unpersist()
+    // a fresh UUID name: two tables may reserve the same snapshot id
+    val observation = new Observation()
+    // order-insensitive content checksum: XOR-fold of per-row xxhash64
+    // over name-sorted columns (sum would overflow long under ANSI
+    // arithmetic)
+    val rowHash = xxhash64(df.columns.sorted.map(c => col(s"`$c`")).toIndexedSeq: _*)
+    df.observe(observation,
+        TierTable.partitionStats(col(partitionCol).cast("string"), rowHash).as("stats"))
+      .write
+      .partitionBy(partitionCol +: effBucket.toSeq: _*)
+      .mode("overwrite").parquet(dataDir)
+    val observed = observedStats(observation).getOrElse(
+      throw new IllegalStateException(
+        s"commit of snapshot $snap at $root: the write's partition stats " +
+          s"were not observed within ${TierTable.ObservedWait} — nothing published"))
+    val stats = observed.getMap[String, Row](0).iterator.map { case (p, r) =>
+      p -> PartitionEntry(s"data/snap=$snap/$partitionCol=$p",
+                          r.getLong(0), r.getLong(1), lineage.get(p))
+    }.toMap
 
     // Requested partitions that produced no rows: explicit empties.
     val empties = (lineage.keySet -- stats.keySet).map(k =>
@@ -220,6 +229,16 @@ final class TierTable(val root: String, spark: SparkSession) {
           Files.deleteIfExists(reserveFile(snap))
         throw t
     }
+
+  /** The observed stats row of a finished write, waiting at most
+    * [[TierTable.ObservedWait]] (the metrics reach the [[Observation]]
+    * through the listener bus, after the write returns); None if they do
+    * not arrive. A test hook: a spec swaps it to stand in for metrics
+    * that never come.
+    */
+  private[table] var observedStats: Observation => Option[Row] = o =>
+    try Some(Await.result(o.future, TierTable.ObservedWait))
+    catch { case _: TimeoutException => None }
 
   /** Test hook: runs immediately before [[publish]]'s CAS check, so a
     * spec can interleave a competing commit deterministically. No-op in
@@ -655,6 +674,32 @@ object TierTable {
   private[table] def commitLockFor(root: java.nio.file.Path): Object =
     commitLocks.computeIfAbsent(
       root.toAbsolutePath.normalize.toString, _ => new Object)
+
+  /** How long a commit waits for its write's observed stats. */
+  private[table] val ObservedWait: FiniteDuration = 2.minutes
+
+  private type Stats = Map[String, (Long, Long)]
+
+  /** A commit's per-partition stats: partition value (as a string) →
+    * (rows, XOR of the rows' hashes). Evaluated by the write's
+    * `Dataset.observe`; the buffer stays a JVM map for a whole task and
+    * is serialized once, when the task's accumulator update ships.
+    */
+  private object PartitionStats extends Aggregator[(String, Long), Stats, Stats] {
+    private def add(b: Stats, p: String, rows: Long, checksum: Long): Stats = {
+      val (r, c) = b.getOrElse(p, (0L, 0L))
+      b.updated(p, (r + rows, c ^ checksum))
+    }
+    def zero: Stats = Map.empty
+    def reduce(b: Stats, in: (String, Long)): Stats = add(b, in._1, 1L, in._2)
+    def merge(a: Stats, b: Stats): Stats =
+      b.foldLeft(a) { case (acc, (p, (r, c))) => add(acc, p, r, c) }
+    def finish(b: Stats): Stats = b
+    def bufferEncoder: Encoder[Stats] = ExpressionEncoder[Stats]()
+    def outputEncoder: Encoder[Stats] = ExpressionEncoder[Stats]()
+  }
+
+  private val partitionStats = udaf(PartitionStats)
 
   private val ManifestName = """manifest-(\d+)\.json""".r
   private val ReserveName = """\.reserve-(\d+)""".r
