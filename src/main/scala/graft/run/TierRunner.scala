@@ -1,6 +1,13 @@
 package graft.run
 
+import java.net.URLEncoder
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{CancellationException, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
 
 import graft.core.{Json, TierSpec}
 import graft.ops.Rollup
@@ -32,6 +39,14 @@ import org.apache.spark.sql.functions._
   * is the natural recompute unit (matches the reference's daily files)
   * and divides all tier widths except 30d, whose buckets are rebuilt
   * from any touched member day.
+  *
+  * Schedule: a run's stages form a DAG by their upstream tables — after
+  * raw, five independent chains (5m→{1h→1d→30d, blocks} and the hist/
+  * hll/kll ladders 1h→1d→30d). Each stage commits as soon as its
+  * upstream has, so several Spark jobs run at once; the stages still
+  * RETIRE (checkpoint written, `afterStage` called) one at a time in
+  * list order, so the checkpoint, resume and upstream_failed semantics
+  * are those of a sequential run.
   */
 final class TierRunner(spark: SparkSession, root: String,
                        saltBuckets: Option[Int] = None) {
@@ -145,8 +160,10 @@ final class TierRunner(spark: SparkSession, root: String,
 
   /** Run the cascade incrementally for the given touched day
     * partitions; write a checkpoint manifest under `runId` after every
-    * stage. Resumable: partitions marked ok in an existing manifest for
-    * `runId` are skipped.
+    * stage, in stage order. Resumable: partitions marked ok in an
+    * existing manifest for `runId` are skipped. Stages commit
+    * concurrently as the DAG allows, each Spark job tagged
+    * `tierrun:<runId>` (the id URL-encoded) and `stage:<key>`.
     */
   def run(runId: String, touchedDays: Set[String],
           rulesetVersion: String =
@@ -166,14 +183,6 @@ final class TierRunner(spark: SparkSession, root: String,
 
     val entries = scala.collection.mutable.ArrayBuffer[RunEntry]()
 
-    // Dependency-aware failure isolation: if a stage's commit (or its
-    // snapshot read) fails, every stage downstream of it is recorded as
-    // skipped:upstream_failed rather than silently rebuilt from the
-    // previous (stale) snapshot and marked ok with lineage pointing at
-    // the new input — the checkpoint manifest must never misrepresent
-    // which tables reflect the current input.
-    val failed = scala.collection.mutable.Set[String]()
-
     // Day is the partition unit of every table below 30d; a 30d level
     // rebuilds whole 30d buckets from every member day of a touched
     // bucket still present in the finer table.
@@ -186,9 +195,11 @@ final class TierRunner(spark: SparkSession, root: String,
         else finer.partitionKeys.filter(d => todo(bucketStart(d, tier.seconds))))
 
     // A raw pass read by several stages is aggregated once over every
-    // touched day — lazily, only if one of them has work — and
-    // persisted until its last reader is done; each reader keeps its
-    // own days and columns, and still fails/resumes on its own.
+    // touched day — lazily, by whichever of them starts first, only if
+    // one has work — and persisted until its last reader retires; each
+    // reader keeps its own days and columns, and still fails/resumes on
+    // its own. The map is shared by the stage threads: every access
+    // holds its lock.
     val readers = stages.collect { case s @ Stage(_, _, _, _, FromRaw(p, _)) => p -> s.key }
     val shared = readers.groupBy(_._1).filter(_._2.size > 1).keySet
     val persisted = scala.collection.mutable.Map[RawPass, DataFrame]()
@@ -199,7 +210,7 @@ final class TierRunner(spark: SparkSession, root: String,
 
     def rows(s: Stage, todo: Set[String]): DataFrame = s.build match {
       case FromRaw(p, ms) if shared(p) =>
-        persisted.getOrElseUpdate(p, fromRaw(p, touchedDays).persist())
+        persisted.synchronized(persisted.getOrElseUpdate(p, fromRaw(p, touchedDays).persist()))
           .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
           .select(("domain" +: "bucket_epoch" +: ms.map(_.name) :+ "day_epoch").map(col): _*)
       case FromRaw(p, _) => fromRaw(p, todo)
@@ -229,38 +240,86 @@ final class TierRunner(spark: SparkSession, root: String,
     val previousOk = previous.toSeq.collect { case (k, "ok") => k.splitAt(k.lastIndexOf('/')) }
       .groupMap(_._1)(_._2.tail)
 
-    // The one stage harness for every table a run maintains: resume-
-    // skip, dependency-aware failure isolation, one copy-on-write
-    // commit, per-partition lineage + metrics, then the checkpoint.
-    def runStage(s: Stage, later: Seq[Stage]): Unit = {
+    // The one stage harness for every table a run maintains, called once
+    // its upstream's outcome is known: resume-skip, dependency-aware
+    // failure isolation, one copy-on-write commit, per-partition lineage
+    // + metrics. If the upstream's commit (or its snapshot read) failed
+    // or was itself skipped, the stage is recorded as
+    // skipped:upstream_failed rather than silently rebuilt from the
+    // previous (stale) snapshot and marked ok with lineage pointing at
+    // the new input — the checkpoint manifest must never misrepresent
+    // which tables reflect the current input.
+    def commit(s: Stage, upstreamOk: Boolean): Outcome = {
       val partitions = partitionsAt(s.tier)
       val already = partitions.filter(p => previous.get(s"${s.key}/$p").contains("ok"))
       val todo = partitions -- already
       val t0 = System.nanoTime()
       def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-      val done: Seq[RunEntry] =
-        if (todo.isEmpty) Nil
-        else if (s.upstream.exists(failed.contains)) {
-          failed += s.key
-          todo.toSeq.map(RunEntry(s.key, _, 0L, "skipped:upstream_failed", 0L))
-        } else try {
+      val (done, ok) =
+        if (todo.isEmpty) (Nil, true)
+        else if (!upstreamOk)
+          (todo.toSeq.map(RunEntry(s.key, _, 0L, "skipped:upstream_failed", 0L)), false)
+        else try {
           val lineage = todo.map(p => p -> PartitionLineage(inputSnapshot, "ok")).toMap
           val m = table(s.key).commitOverwrite(rows(s, todo), "day_epoch", lineage)
           val ms = elapsedMs
-          todo.toSeq.map(p =>
-            RunEntry(s.key, p, m.partitions.get(p).map(_.rows).getOrElse(0L), "ok", ms))
+          (todo.toSeq.map(p =>
+            RunEntry(s.key, p, m.partitions.get(p).map(_.rows).getOrElse(0L), "ok", ms)), true)
         } catch {
           case e: Exception =>
-            failed += s.key
             val status = RunManifest.errorStatus(e)
-            todo.toSeq.map(RunEntry(s.key, _, 0L, status, elapsedMs))
+            (todo.toSeq.map(RunEntry(s.key, _, 0L, status, elapsedMs)), false)
         }
       // resumed partitions are re-recorded, or the NEXT resume would
       // rebuild them
-      entries ++= (already.toSeq.map(RunEntry(s.key, _, -1L, "ok", 0L)) ++ done)
-        .sortBy(_.partition.toLong)
-      readers.toMap.collect { case (p, last) if last == s.key => p }
-        .foreach(persisted.remove(_).foreach(_.unpersist()))
+      Outcome((already.toSeq.map(RunEntry(s.key, _, -1L, "ok", 0L)) ++ done)
+        .sortBy(_.partition.toLong), ok)
+    }
+
+    // The stages run as a DAG: each one starts on its own thread of a
+    // per-run pool as soon as its upstream's outcome is known, so the
+    // five chains commit side by side and FIFO scheduling fills the
+    // slots one stage's fixed costs leave idle. The threads are
+    // started here, so they inherit the caller's Spark local properties
+    // (and no SQL execution id); every job of a stage carries the job
+    // tags `tierrun:<runId>` and `stage:<key>`. A job tag may not hold
+    // ',', so the run id goes into its tag URL-encoded.
+    val sc = spark.sparkContext
+    val runTag = "tierrun:" + URLEncoder.encode(runId, StandardCharsets.UTF_8)
+    @volatile var aborted = false
+    val threads = scala.collection.mutable.ArrayBuffer[Thread]()
+    val pool = new ThreadPoolExecutor(stages.size, stages.size, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"tierrun-$runId-${threads.size}")
+        t.setDaemon(true)
+        threads += t
+        t
+      })
+    pool.prestartAllCoreThreads()
+    val outcomes = stages.foldLeft(Map.empty[String, Future[Outcome]]) { (started, s) =>
+      val outcome = Promise[Outcome]()
+      val tags = Set(runTag, s"stage:${s.key}")
+      pool.execute { () =>
+        outcome.complete(try {
+          val upstreamOk = s.upstream.forall(u => Await.result(started(u), Duration.Inf).ok)
+          if (aborted) throw new CancellationException(s"run $runId aborted")
+          sc.addJobTags(tags)
+          try Success(commit(s, upstreamOk))
+          finally sc.removeJobTags(tags)
+        } catch { case t: Throwable => Failure(t) })
+      }
+      started + (s.key -> outcome.future)
+    }
+
+    // Stages retire in list order on this thread: the checkpoint after
+    // each one lists exactly the stages retired so far, as a sequential
+    // run would write it.
+    def retire(s: Stage, later: Seq[Stage]): Unit = {
+      entries ++= Await.result(outcomes(s.key), Duration.Inf).entries
+      persisted.synchronized {
+        readers.toMap.collect { case (p, last) if last == s.key => p }
+          .foreach(persisted.remove(_).foreach(_.unpersist()))
+      }
       val carried = for (l <- later; p <- previousOk.getOrElse(l.key, Nil).sortBy(_.toLong))
         yield RunEntry(l.key, p, -1L, "ok", 0L)
       val tmp = ckptPath.resolveSibling(s".run-$runId.json.tmp")
@@ -271,8 +330,25 @@ final class TierRunner(spark: SparkSession, root: String,
       afterStage(s.key)
     }
 
-    try for (s +: later <- stages.tails) runStage(s, later)
-    finally persisted.values.foreach(_.unpersist())
+    // A stage that threw a non-Exception, or a failed retirement (the
+    // checkpoint write, afterStage), aborts the run: a stage still
+    // waiting on its upstream does not start, and the run's jobs active
+    // at that moment are cancelled. A commit already past that point may
+    // still submit and finish its write, so `run` rethrows only once
+    // every stage has finished — it never returns while one of its
+    // commits is still writing.
+    try for (s +: later <- stages.tails) retire(s, later)
+    catch {
+      case t: Throwable =>
+        aborted = true
+        sc.cancelJobsWithTag(runTag, s"run $runId aborted")
+        outcomes.values.foreach(Await.ready(_, Duration.Inf))
+        throw t
+    } finally {
+      pool.shutdown()
+      threads.foreach(_.join())
+      persisted.synchronized(persisted.values.foreach(_.unpersist()))
+    }
     RunManifest(runId, inputSnapshot, entries.toSeq, rulesetVersion)
   }
 
@@ -410,10 +486,17 @@ private object TierRunner {
     * raw table) and how its rows are built. */
   final case class Stage(key: String, dir: String, tier: TierSpec,
                          upstream: Option[String], build: Build)
+
+  /** What a stage left for its retirement and its downstream stages:
+    * its checkpoint entries, and whether its table now reflects the
+    * run's input (false: it failed or was skipped). */
+  final case class Outcome(entries: Seq[RunEntry], ok: Boolean)
 }
 
 /** One (stage, partition) record of a run: lineage status + metrics
-  * (row count; wall-clock of the stage commit that produced it).
+  * (row count; wall-clock of the stage commit that produced it, timed
+  * from when its upstream stage finished). Stages commit concurrently,
+  * so their times overlap and their sum can exceed the run's wall time.
   * A resumed partition (ok in the run's earlier checkpoint) carries
   * rows −1 and elapsed 0; a skipped one rows 0 and elapsed 0.
   */
