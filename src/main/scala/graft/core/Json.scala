@@ -32,6 +32,11 @@ object Json {
   /** Compact serialization of a tree built with [[obj]]. */
   def write(node: JsonNode): String = mapper.writeValueAsString(node)
 
+  /** The tree of a JSON document written elsewhere (e.g. a Spark
+    * schema's `json`), to embed in an object with `set`.
+    */
+  def tree(text: String): JsonNode = mapper.readTree(text)
+
   /** Parse `text`, which must be a JSON object; `what` names the
     * document in every error raised while reading it.
     */
@@ -75,6 +80,9 @@ object Json {
     def long(name: String): Long = optLong(name).getOrElse(fail(name, "is missing"))
     def str(name: String): String = optStr(name).getOrElse(fail(name, "is missing"))
     def obj(name: String): Doc = optObj(name).getOrElse(fail(name, "is missing"))
+
+    /** This object as compact JSON text. */
+    def json: String = write(node)
 
     /** This object's members, in document order, each an object. */
     def members: Seq[(String, Doc)] =

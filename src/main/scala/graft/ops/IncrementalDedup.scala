@@ -135,13 +135,13 @@ final class IncrementalDedup(spark: SparkSession, root: String,
   private def bandBucket(bandHash: org.apache.spark.sql.Column) =
     pmod(xxhash64(bandHash), lit(hashBuckets.toLong))
 
-  /** The empty witness frame (schema only — nothing is ever read from
-    * it, and committing it writes no data files, so its column types
-    * never reach disk).
+  /** The empty witness frame, typed as [[witnessesFor]] types its rows
+    * (`band` int as [[Dedup.lshBands]] makes it, long ids): a local
+    * relation, and committing it writes no data files.
     */
   private def emptyWitnesses(): DataFrame = {
     import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
       StructType(Seq(StructField("band", IntegerType),
         StructField("band_hash", StringType),
         StructField("id_a", LongType), StructField("id_b", LongType))))
@@ -219,12 +219,8 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     pairTable.commitOverwrite(witnesses.withColumn("ingest_seq", lit(seq)),
       "ingest_seq", Map(seq.toString -> PartitionLineage(seq, "ok")))
     // read back the committed partition (no recompute for the caller);
-    // a witness table that is still all-empty has no schema to read —
-    // that ingest legitimately found nothing
-    try pairTable.read(Set(seq.toString))
-      .select("id_a", "id_b").distinct()
-    catch { case _: graft.table.NoSnapshotDataException =>
-      witnesses.select("id_a", "id_b").distinct() }
+    // an ingest that found nothing reads back empty, typed by the manifest
+    pairTable.read(Set(seq.toString)).select("id_a", "id_b").distinct()
   }
 
   /** Pair witnesses introduced by ingest `seq`, computed AS OF that
@@ -238,7 +234,7 @@ final class IncrementalDedup(spark: SparkSession, root: String,
   private def witnessesFor(seq: Long): DataFrame = {
     val asOfKeys = bandTable.partitionKeys.filter(_.toLong <= seq)
     // a corpus with no band data at all (first ingest was empty) has no
-    // witnesses — and no schema to read
+    // witnesses
     if (asOfKeys.isEmpty) return emptyWitnesses()
     val inc = bandTable.read(Set(seq.toString))
     // the increment's touched band buckets: ≤ hashBuckets values (a
@@ -321,12 +317,10 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     */
   def pairs(): DataFrame = {
     heal()
-    // a corpus that never produced a witness (no duplicate pairs
-    // anywhere, or nothing ingested) has only explicit-empty pair
-    // partitions — a legitimate empty result, not an error
-    // catches ONLY the legitimately-empty case — a corrupt or
-    // unsupported-format manifest still fails loudly (it must never
-    // read as "no duplicates")
+    // a witness table never committed (nothing ingested) is a
+    // legitimate empty result; the catch takes ONLY that case — a
+    // corrupt or unsupported-format manifest still fails loudly (it must
+    // never read as "no duplicates")
     val witnesses =
       try pairTable.read()
       catch { case _: graft.table.NoSnapshotDataException =>

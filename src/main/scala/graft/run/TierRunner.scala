@@ -53,27 +53,15 @@ final class TierRunner(spark: SparkSession, root: String,
   import TierRunner._
   import TierSpec.{T1d, T1h, T30d, T5m}
 
-  /** The value cascade's finest level: flagged measures (three-state
-    * missingness) plus `text_sha`, the byte-identical-text invariant
-    * XOR-folded up every tier. saltBuckets (skew mode for Zipf-head
-    * domains) makes it the two-phase salted aggregation — spec-pinned
-    * equal. */
-  private val valuePass = new RawPass(T5m,
-    Rollup.flagged :+ Rollup.textShaOf(xxhash64(graft.ingest.WebPages.extractText(col("html")))),
-    saltBuckets)
-
   // Sketch ladders at 1h→1d→30d — an exact histogram (per-band sums),
   // HLL distinct urls (register union), KLL quantiles (sketch merge):
   // a distinct-count or distribution query over years of data reads a
-  // day-partitioned sketch tier, never raw. The three finest levels
-  // share one grouping key, so ONE raw pass feeds all three commits.
+  // day-partitioned sketch tier, never raw.
   private val HistBands = 8
-  private val sketchPass = new RawPass(T1h,
-    Rollup.hist(HistBands) ++ Seq(Rollup.urlSketch, Rollup.valueSketch, Rollup.rowCount))
   private val sketchStages = Seq(
-    Stage("hist_1h", "hist_1h", T1h, None, FromRaw(sketchPass, Rollup.hist(HistBands))),
-    Stage("hll_1h", "hll_1h", T1h, None, FromRaw(sketchPass, Seq(Rollup.urlSketch, Rollup.rowCount))),
-    Stage("kll_1h", "kll_1h", T1h, None, FromRaw(sketchPass, Seq(Rollup.valueSketch, Rollup.rowCount))),
+    Stage("hist_1h", "hist_1h", T1h, None, FromRaw(Rollup.hist(HistBands))),
+    Stage("hll_1h", "hll_1h", T1h, None, FromRaw(Seq(Rollup.urlSketch, Rollup.rowCount))),
+    Stage("kll_1h", "kll_1h", T1h, None, FromRaw(Seq(Rollup.valueSketch, Rollup.rowCount))),
     Stage("hist_1d", "hist_1d", T1d, Some("hist_1h"), Merge),
     Stage("hll_1d", "hll_1d", T1d, Some("hll_1h"), Merge),
     Stage("kll_1d", "kll_1d", T1d, Some("kll_1h"), Merge),
@@ -88,7 +76,14 @@ final class TierRunner(spark: SparkSession, root: String,
     * are the tables' names under `root`.
     */
   private val stages: Seq[Stage] = Seq(
-    Stage("5m", "tier_5m", T5m, None, FromRaw(valuePass, valuePass.measures)),
+    // the value cascade's finest level: flagged measures (three-state
+    // missingness) plus `text_sha`, the byte-identical-text invariant
+    // XOR-folded up every tier; saltBuckets (skew mode for Zipf-head
+    // domains) makes it the two-phase salted aggregation — spec-pinned
+    // equal
+    Stage("5m", "tier_5m", T5m, None, FromRaw(
+      Rollup.flagged :+ Rollup.textShaOf(xxhash64(graft.ingest.WebPages.extractText(col("html")))),
+      saltBuckets)),
     Stage("1h", "tier_1h", T1h, Some("5m"), Merge),
     Stage("1d", "tier_1d", T1d, Some("1h"), Merge),
     Stage("30d", "tier_30d", T30d, Some("1d"), Merge),
@@ -194,26 +189,10 @@ final class TierRunner(spark: SparkSession, root: String,
         if (tier.seconds <= T1d.seconds) todo
         else finer.partitionKeys.filter(d => todo(bucketStart(d, tier.seconds))))
 
-    // A raw pass read by several stages is aggregated once over every
-    // touched day — lazily, by whichever of them starts first, only if
-    // one has work — and persisted until its last reader retires; each
-    // reader keeps its own days and columns, and still fails/resumes on
-    // its own. The map is shared by the stage threads: every access
-    // holds its lock.
-    val readers = stages.collect { case s @ Stage(_, _, _, _, FromRaw(p, _)) => p -> s.key }
-    val shared = readers.groupBy(_._1).filter(_._2.size > 1).keySet
-    val persisted = scala.collection.mutable.Map[RawPass, DataFrame]()
-    def fromRaw(p: RawPass, days: Set[String]): DataFrame =
-      Rollup.fromRaw(rawTable.read(days), p.tier, measures = p.measures,
-          saltBuckets = p.saltBuckets)
-        .withColumn("day_epoch", dayEpoch(p.tier))
-
     def rows(s: Stage, todo: Set[String]): DataFrame = s.build match {
-      case FromRaw(p, ms) if shared(p) =>
-        persisted.synchronized(persisted.getOrElseUpdate(p, fromRaw(p, touchedDays).persist()))
-          .filter(col("day_epoch").isin(todo.map(_.toLong).toSeq: _*))
-          .select(("domain" +: "bucket_epoch" +: ms.map(_.name) :+ "day_epoch").map(col): _*)
-      case FromRaw(p, _) => fromRaw(p, todo)
+      case FromRaw(ms, salt) =>
+        Rollup.fromRaw(rawTable.read(todo), s.tier, measures = ms, saltBuckets = salt)
+          .withColumn("day_epoch", dayEpoch(s.tier))
       case Merge =>
         Rollup.cascade(finerRows(table(s.upstream.get), s.tier, todo), s.tier)
           .withColumn("day_epoch", dayEpoch(s.tier))
@@ -316,10 +295,6 @@ final class TierRunner(spark: SparkSession, root: String,
     // run would write it.
     def retire(s: Stage, later: Seq[Stage]): Unit = {
       entries ++= Await.result(outcomes(s.key), Duration.Inf).entries
-      persisted.synchronized {
-        readers.toMap.collect { case (p, last) if last == s.key => p }
-          .foreach(persisted.remove(_).foreach(_.unpersist()))
-      }
       val carried = for (l <- later; p <- previousOk.getOrElse(l.key, Nil).sortBy(_.toLong))
         yield RunEntry(l.key, p, -1L, "ok", 0L)
       val tmp = ckptPath.resolveSibling(s".run-$runId.json.tmp")
@@ -347,7 +322,6 @@ final class TierRunner(spark: SparkSession, root: String,
     } finally {
       pool.shutdown()
       threads.foreach(_.join())
-      persisted.synchronized(persisted.values.foreach(_.unpersist()))
     }
     RunManifest(runId, inputSnapshot, entries.toSeq, rulesetVersion)
   }
@@ -467,15 +441,12 @@ final class TierRunner(spark: SparkSession, root: String,
 
 private object TierRunner {
 
-  /** One aggregation of the touched raw rows at `tier` into `measures`
-    * (reference identity: stages naming the same pass share it). */
-  final class RawPass(val tier: TierSpec, val measures: Seq[Rollup.Measure],
-                      val saltBuckets: Option[Int] = None)
-
   /** How a stage builds the rows of the partitions it recomputes. */
   sealed trait Build
-  /** Finest level: the `measures` columns of a raw pass. */
-  final case class FromRaw(pass: RawPass, measures: Seq[Rollup.Measure]) extends Build
+  /** Finest level: the touched raw rows aggregated at the stage's tier
+    * into `measures` (salted two-phase when `saltBuckets` is set). */
+  final case class FromRaw(measures: Seq[Rollup.Measure],
+                           saltBuckets: Option[Int] = None) extends Build
   /** `Rollup.cascade` merge of the upstream table's rows. */
   case object Merge extends Build
   /** Gorilla block encode of the upstream 5m table. */

@@ -6,11 +6,13 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.core.Json
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 
 /** Iceberg-shaped snapshot/manifest table layer over Parquet
   * directories — the exact subset of Iceberg semantics the target spec
@@ -21,16 +23,19 @@ import org.apache.spark.sql.functions._
   * Layout under `root/`:
   * {{{
   *   data/snap=<k>/part=<p>/…parquet one dir per (snapshot, partition)
-  *   manifests/manifest-<k>.json     snapshot manifest (see [[Manifest]])
+  *   manifests/manifest-<k>.json     snapshot manifest (see [[Manifest]]):
+  *                                   its schema and its partitions' files
   *   CURRENT                         atomic pointer: current snapshot id
   * }}}
   *
   * Both directory levels are Hive-style (`snap=<k>/<col>=<p>`) so a
   * snapshot read is ONE multi-path parquet scan with partition values
-  * inferred relative to `data/` — the plan stays O(1) nodes no matter
+  * parsed relative to `data/` — the plan stays O(1) nodes no matter
   * how many partitions the snapshot spans (a per-leaf union would grow
   * the plan by one branch per partition: 1,000-node plans after three
-  * years of daily partitions).
+  * years of daily partitions). Like an Iceberg manifest, the snapshot's
+  * manifest names its schema as well as its files, so a read is given
+  * the schema and starts no Spark job before its action.
   *
   * Commits are atomic: data is fully written, the manifest is written,
   * then CURRENT is atomically moved into place — a reader always sees a
@@ -137,6 +142,15 @@ final class TierTable(val root: String, spark: SparkSession) {
     * empty partition (rows=0, no data path) and is NOT carried forward
     * — an empty recompute result deletes the partition's old contents
     * instead of silently resurrecting them.
+    *
+    * Schema contract: the manifest records the schema a read returns.
+    * A commit keeps its parent's schema, column order included, when it
+    * writes no rows or rows of the same columns in any order (parquet
+    * resolves columns by name, and the checksum hashes them
+    * name-sorted); one that writes rows of other columns or types
+    * (nullability aside) over a parent still holding data partitions
+    * fails before publish, since one snapshot's files must share one
+    * schema.
     */
   /** Optional second physical clustering level: when `bucketCol` is set
     * (or inherited from the parent snapshot), data is written as
@@ -199,6 +213,16 @@ final class TierTable(val root: String, spark: SparkSession) {
       p -> PartitionEntry(s"data/snap=$snap/$partitionCol=$p",
                           r.getLong(0), r.getLong(1), lineage.get(p))
     }.toMap
+    val written = TierTable.readSchema(df.schema, partitionCol, effBucket)
+    val schema = parent match {
+      case Some(p) if stats.isEmpty || p.schema.sortBy(_.name) == written.sortBy(_.name) =>
+        p.schema
+      case Some(p) if p.partitions.values.exists(_.path.nonEmpty) =>
+        throw new IllegalStateException(
+          s"commit of snapshot $snap at $root writes schema ${written.toDDL} over data " +
+            s"of schema ${p.schema.toDDL} — nothing published")
+      case _ => written
+    }
 
     // Requested partitions that produced no rows: explicit empties.
     val empties = (lineage.keySet -- stats.keySet).map(k =>
@@ -208,7 +232,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     val fresh = stats ++ empties
     val carried = parent.map(_.partitions).getOrElse(Map.empty) -- fresh.keySet
     val m = Manifest(snap, parent.map(_.snapshot), stamp, partitionCol,
-                     carried ++ fresh, effBucket)
+                     carried ++ fresh, effBucket, schema)
     publish(m, parent.map(_.snapshot))
 
     }
@@ -294,22 +318,18 @@ final class TierTable(val root: String, spark: SparkSession) {
   /** Read the current snapshot (one multi-path scan of its partition
     * directories).
     */
-  def read(): DataFrame = {
-    val m = currentManifest.getOrElse(
-      throw new NoSnapshotDataException(s"no snapshot at $root"))
-    readManifest(m, None)
-  }
+  def read(): DataFrame = readManifest(snapshotToRead, None)
 
   /** Pruned read: only the requested partitions' directories are
     * listed and scanned — the plan and the I/O are O(|partitions|),
     * never O(table). Keys absent from the snapshot (or explicitly
     * empty) are skipped.
     */
-  def read(partitions: Set[String]): DataFrame = {
-    val m = currentManifest.getOrElse(
-      throw new NoSnapshotDataException(s"no snapshot at $root"))
-    readManifest(m, Some(partitions))
-  }
+  def read(partitions: Set[String]): DataFrame =
+    readManifest(snapshotToRead, Some(partitions))
+
+  private def snapshotToRead: Manifest = currentManifest.getOrElse(
+    throw new NoSnapshotDataException(s"no snapshot at $root"))
 
   /** Partition keys present (non-empty) in the current snapshot. */
   def partitionKeys: Set[String] =
@@ -317,47 +337,22 @@ final class TierTable(val root: String, spark: SparkSession) {
       case (k, p) if p.path.nonEmpty => k
     }.toSet).getOrElse(Set.empty)
 
-  private def readManifest(m: Manifest, only: Option[Set[String]]): DataFrame = {
-    // Partition leaves of one snapshot live under different snap=<k>
-    // dirs (copy-on-write); both levels are Hive-style, so ONE
-    // multi-path read with basePath=data/ re-infers (snap, partition)
-    // from the directory names — plan size O(1), not one union branch
-    // per partition. Explicit empty partitions have no data path.
-    val selected = m.partitions.toSeq.sortBy(_._1)
-      .filter { case (k, p) =>
-        p.path.nonEmpty && only.forall(_.contains(k)) }
-    if (selected.isEmpty) {
-      // a PRUNED read whose requested partitions are all explicitly
-      // empty is a legitimate empty result (e.g. a recompute that
-      // produced zero rows): return an empty frame with the table's
-      // schema, derived from any data partition. Only a snapshot with
-      // no data anywhere is an error.
-      val anyData = m.partitions.toSeq.sortBy(_._1)
-        .collectFirst { case (_, p) if p.path.nonEmpty => p }
-      anyData match {
-        case Some(p) if only.isDefined =>
-          return typed(m, spark.read.option("basePath", s"$root/data")
-            .parquet(s"$root/${p.path}"))
-            .filter(lit(false))
-        case _ =>
-          throw new NoSnapshotDataException(
-            s"no data partitions in snapshot ${m.snapshot} at $root" +
-              only.map(o => s" (requested: ${o.toSeq.sorted.mkString(",")})")
-                .getOrElse(""))
-      }
-    }
-    val paths = selected.map { case (_, p) => s"$root/${p.path}" }
-    typed(m, spark.read.option("basePath", s"$root/data").parquet(paths: _*))
-  }
-
-  /** Hive-inferred directory columns come back as ints; pin the
-    * partition (and bucket, when present) columns to long so re-reads
-    * hash/checksum identically to the frames that were committed.
+  /** Partition leaves of one snapshot live under different snap=<k>
+    * dirs (copy-on-write); both levels are Hive-style, so ONE
+    * multi-path read with basePath=data/ takes (snap, partition) from
+    * the directory names — plan size O(1), not one union branch per
+    * partition. The manifest's schema types every column, the partition
+    * and bucket columns included, so no footer is read to infer it. A
+    * selection with no data partition (explicit empties carry no path)
+    * is an empty relation of that schema.
     */
-  private def typed(m: Manifest, df: DataFrame): DataFrame = {
-    val p = df.withColumn(m.partitionCol, col(m.partitionCol).cast("long"))
-      .drop("snap")
-    m.bucketCol.fold(p)(b => p.withColumn(b, col(b).cast("long")))
+  private def readManifest(m: Manifest, only: Option[Set[String]]): DataFrame = {
+    val paths = m.partitions.toSeq.sortBy(_._1).collect {
+      case (k, p) if p.path.nonEmpty && only.forall(_.contains(k)) => s"$root/${p.path}"
+    }
+    if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), m.schema)
+    else spark.read.schema(m.schema).option("basePath", s"$root/data")
+      .parquet(paths: _*).drop("snap")
   }
 
   /** Manifest-only retention commit: a new snapshot that simply drops
@@ -372,7 +367,7 @@ final class TierTable(val root: String, spark: SparkSession) {
     if (dropped.isEmpty) return Set.empty
     val snap = reserveSnapshotId()
     val m = Manifest(snap, Some(parent.snapshot), System.currentTimeMillis(),
-                     parent.partitionCol, kept, parent.bucketCol)
+                     parent.partitionCol, kept, parent.bucketCol, parent.schema)
     releaseOnFailure(snap)(publish(m, Some(parent.snapshot)))
     dropped.keySet
   }
@@ -536,15 +531,13 @@ final class TierTable(val root: String, spark: SparkSession) {
   }
 }
 
-/** Raised when a read finds legitimately NO data: the table has no
-  * snapshot yet, or nothing in the snapshot (or the selected subset)
-  * carries rows and there is no schema source. Deliberately distinct
-  * from the plain IllegalStateExceptions that signal CORRUPTION
-  * (unversioned/unsupported manifest formats, missing fields): callers
-  * that want to treat an empty table as an empty result (e.g.
-  * [[graft.ops.IncrementalDedup.pairs]]) catch THIS type only, so a
-  * corrupt manifest still fails loudly instead of reading as "no
-  * duplicates".
+/** Raised when a read finds no snapshot: the table has never been
+  * committed. Deliberately distinct from the plain
+  * IllegalStateExceptions that signal CORRUPTION (unversioned or
+  * unsupported manifest formats, missing fields), so a caller that
+  * treats a fresh table as empty (e.g.
+  * [[graft.ops.IncrementalDedup.pairs]]) catches THIS type only and a
+  * corrupt manifest still fails loudly.
   */
 final class NoSnapshotDataException(msg: String)
   extends IllegalStateException(msg)
@@ -573,16 +566,21 @@ final case class PartitionLineage(inputSnapshot: Long, status: String,
 final case class PartitionEntry(path: String, rows: Long, checksum: Long,
                                 lineage: Option[PartitionLineage])
 
+/** One snapshot: its partitions' files and lineage, and the schema a
+  * read of them returns.
+  */
 final case class Manifest(snapshot: Long, parent: Option[Long],
                           timestampMs: Long, partitionCol: String,
                           partitions: Map[String, PartitionEntry],
-                          bucketCol: Option[String] = None) {
+                          bucketCol: Option[String] = None,
+                          schema: StructType = new StructType()) {
 
   def totalRows: Long = partitions.values.map(_.rows).sum
 
   /** Compact JSON: fixed key order, partitions sorted by key, optional
     * keys (`bucket_col`, `lineage`, `error`, the id range) omitted when
-    * unset, `parent` written as null for a root snapshot.
+    * unset, `parent` written as null for a root snapshot, the schema in
+    * Spark's JSON form.
     */
   def toJson: String = {
     val o = Json.obj().put("format", Manifest.FormatVersion)
@@ -590,6 +588,7 @@ final case class Manifest(snapshot: Long, parent: Option[Long],
     parent.fold(o.putNull("parent"))(o.put("parent", _))
     o.put("timestamp_ms", timestampMs).put("partition_col", partitionCol)
     bucketCol.foreach(o.put("bucket_col", _))
+    o.set[JsonNode]("schema", Json.tree(schema.json))
     val parts = o.putObject("partitions")
     for ((k, p) <- partitions.toSeq.sortBy(_._1)) {
       val e = parts.putObject(k).put("path", p.path).put("rows", p.rows)
@@ -607,29 +606,16 @@ final case class Manifest(snapshot: Long, parent: Option[Long],
 }
 
 object Manifest {
-  /** Table-layout/manifest format version. Bumped whenever the on-disk
-    * contract changes (v2: Hive-style `data/snap=<k>/<col>=<p>` layout +
-    * name-sorted-column checksums; v1 — pre-round-2 `data/s<k>` — had no
-    * version field at all). A versionless or mismatched manifest fails
-    * fast at open instead of yielding silently different plans,
-    * spurious snapshot diffs, or a NumberFormatException deep inside
-    * [[TierTable.expireSnapshots]].
-    *
-    * v3 adds the optional lineage `id_min`/`id_max` range. The bump
-    * matters even though the field is optional: a v2 reader's entry
-    * regex would not match entries carrying the new keys and would
-    * silently DROP those partitions rather than fail — exactly the
-    * failure mode the version field exists to prevent. This reader
-    * accepts v2 manifests (which cannot contain the field) and v3.
-    *
-    * v4 adds the optional `bucket_col` physical sub-clustering level
-    * (`snap=<k>/<col>=<p>/<bucket>=<b>/`). A v3 reader would silently
-    * read bucketed data WITHOUT typing the bucket column (int instead
-    * of long → checksum drift) — same rationale, same bump. Accepts
-    * v2/v3 (which cannot contain the field) and v4.
+  /** Table-layout/manifest format version, the only one this reader
+    * opens. Format 5 records the snapshot's schema, which every read is
+    * given; a manifest of an earlier format carries none, so its table
+    * must be rebuilt rather than read by inferring one. A versionless
+    * (pre-v2, `data/s<k>` layout) or unknown format fails at open too,
+    * instead of yielding silently different plans or spurious snapshot
+    * diffs.
     */
-  val FormatVersion: Long = 4L
-  val ReadableVersions: Set[Long] = Set(2L, 3L, FormatVersion)
+  val FormatVersion: Long = 5L
+  val ReadableVersions: Set[Long] = Set(FormatVersion)
 
   /** Reads fields by name in any order; a missing or mistyped field
     * fails naming it, so no partition entry is ever silently dropped.
@@ -644,7 +630,8 @@ object Manifest {
       case Some(v) if !ReadableVersions.contains(v) =>
         throw new IllegalStateException(
           s"tier-table manifest format $v not in supported " +
-            ReadableVersions.toSeq.sorted.mkString("{", ",", "}"))
+            ReadableVersions.toSeq.sorted.mkString("{", ",", "}") +
+            ": rebuild the table (a manifest before format 5 records no schema)")
       case _ => ()
     }
     val parts = m.obj("partitions").members.map { case (k, p) =>
@@ -655,8 +642,13 @@ object Manifest {
       k -> PartitionEntry(p.str("path"), p.long("rows"), p.long("checksum"),
                           lineage)
     }.toMap
+    val schema = DataType.fromJson(m.obj("schema").json) match {
+      case s: StructType => s
+      case t => throw new IllegalStateException(
+        s"tier-table manifest: schema is not a struct: ${t.simpleString}")
+    }
     Manifest(m.long("snapshot"), m.optLong("parent"), m.long("timestamp_ms"),
-             m.str("partition_col"), parts, m.optStr("bucket_col"))
+             m.str("partition_col"), parts, m.optStr("bucket_col"), schema)
   }
 }
 
@@ -700,6 +692,27 @@ object TierTable {
   }
 
   private val partitionStats = udaf(PartitionStats)
+
+  /** The schema a read of `df` committed by `partitionCol` (and
+    * `bucketCol`) returns: the data columns in write order, then the
+    * partition and bucket columns as long, everything nullable as a
+    * parquet read makes it.
+    */
+  private def readSchema(df: StructType, partitionCol: String,
+                         bucketCol: Option[String]): StructType = {
+    val dirCols = partitionCol +: bucketCol.toSeq
+    StructType(df.filterNot(f => dirCols.contains(f.name)).map(f =>
+      StructField(f.name, nullable(f.dataType), nullable = true, f.metadata)) ++
+      dirCols.map(StructField(_, LongType)))
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
 
   private val ManifestName = """manifest-(\d+)\.json""".r
   private val ReserveName = """\.reserve-(\d+)""".r
